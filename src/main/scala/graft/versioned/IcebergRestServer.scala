@@ -6,12 +6,13 @@ import java.util.concurrent.{ConcurrentHashMap, Executors}
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.connector.catalog.TableChange
 import org.apache.spark.sql.functions.col
 
 /** Embedded Apache Iceberg REST catalog over graft repos — read-only by
@@ -62,60 +63,70 @@ import org.apache.spark.sql.functions.col
   *    `stage-create: true` it answers STAGED (snapshot-less) metadata
   *    and commits nothing — the spec's transactional CTAS staging; the
   *    table materializes when the engine posts the staged commit.
-  *  - `POST .../tables/{t}` (commitTable) accepts the spec's APPEND,
-  *    OVERWRITE and DELETE commits — requirements `assert-table-uuid` /
-  *    `assert-ref-snapshot-id` / `assert-current-schema-id` /
-  *    `assert-last-assigned-field-id` validated against the served
-  *    metadata AND re-checked against the graft branch head INSIDE the
-  *    commit race (a requirement that no longer holds at publish time
-  *    answers 409 CommitFailedException, the client's signal to refresh
-  *    and retry); updates `add-snapshot` + `set-snapshot-ref` +
-  *    `set-properties` + `add-schema`/`set-current-schema` (schema
-  *    evolution — lowered by field-id diff onto graft's metadata-only
-  *    evolution, [[SchemaEvolution]]: add / rename / widen / drop, with
-  *    the same guards as native ALTER; a schema-only commit needs no
-  *    snapshot, and an append may ride the same commit atomically).
-  *    `assert-create` commits publish a STAGED CREATE: schema, spec,
-  *    properties and the first snapshot land as ONE graft commit;
-  *    concurrent creators race on the key and exactly one wins
-  *    (reference parity for both: `LakeFSTableOperations.commit`,
-  *    java:115-147, accepts arbitrary TableMetadata swaps). The posted
-  *    snapshot's manifest list is walked
-  *    with [[IcebergImport]]; files already under the repo's data plane
-  *    register ZERO-COPY (served metadata stamps `write.data.path`
-  *    inside the data plane, so compliant writers stage there), others
-  *    are copied in; FileEntry stats come from O(new files) parquet
-  *    footer reads — no Spark job, no data scan. An `append` may not
-  *    drop base files; `overwrite`/`delete` is the engine's
-  *    copy-on-write rewrite — dropped base files leave the live set and
-  *    added files register at the table's next sequence in ONE commit
-  *    ([[TableOps.commitRewrite]]), which is how an external CoW
-  *    DELETE/UPDATE/MERGE lands on the graft branch. EQUALITY delete
-  *    files (content=2) lower onto graft predicate tombstones — the
-  *    inverse of the exporter's tombstone → equality-delete mapping:
-  *    value rows become ONE tombstone at the table's next sequence,
-  *    same-commit data files register at that sequence and are exempt
-  *    (the spec's strictly-lower rule — the Flink-upsert shape).
-  *    POSITIONAL delete files (content=1) and v3 DELETION VECTORS — the
-  *    default Spark MoR DELETE/UPDATE shape — lower onto a SERVER-SIDE
-  *    CoW rewrite of exactly the referenced files: the posted positions
-  *    apply through the independent importer's sequence semantics
-  *    ([[IcebergImport.readPlan]] on a dirty-files sub-plan), survivors
-  *    land as native graft files, and [[TableOps.commitRewrite]] swaps
-  *    them atomically — O(dirty files + delete rows), the cost the
-  *    engine's own CoW would have paid, with the same stale-base 409
-  *    (reference parity: LakeFSTableOperations.commit, java:115-147,
-  *    accepts any metadata swap). The FULL Flink-upsert checkpoint
-  *    lands in ONE commit: equality + positional deletes together,
-  *    positions referencing same-commit added files (intra-checkpoint
-  *    dedup — those adds fold into the rewrite), the equality predicate
-  *    applied physically to dirty files and as a tombstone for
-  *    untouched ones, same-commit adds exempt per the strictly-lower
-  *    rule. What still refuses loudly with 400: NULL-valued or
-  *    oversized (> [[IcebergExport.MaxEqualityRows]]) equality deletes,
-  *    positional deletes referencing files neither live at the base nor
-  *    added by the commit, MoR deletes mixed with CoW file drops, and
-  *    replace summaries.
+  *  - TABLE COMMITS: `POST .../tables/{t}` (CommitTableRequest) is a
+  *    one-member transaction; `POST /v1/transactions/commit`
+  *    (CommitTransactionRequest, answered 204) carries any number of
+  *    members on ONE branch, each table named once. Every member goes
+  *    through one pipeline — parse → validate against the served state
+  *    → stage → publish — and all members land in ONE graft commit or
+  *    none does (the repo-level transactionality the reference
+  *    inherits from lakeFS).
+  *     - Requirements: `assert-create`, `assert-table-uuid`,
+  *       `assert-ref-snapshot-id` (main, or a named tag ref),
+  *       `assert-current-schema-id`, `assert-last-assigned-field-id`,
+  *       `assert-default-spec-id`, `assert-last-assigned-partition-id`
+  *       and `assert-default-sort-order-id`, validated against the
+  *       served metadata; each member's base is re-checked against the
+  *       branch head INSIDE the commit race, so a requirement that no
+  *       longer holds at publish answers 409 CommitFailedException, the
+  *       client's signal to refresh and retry.
+  *     - Updates: `add-snapshot` (+ its `set-snapshot-ref` on main),
+  *       `set-properties` / `remove-properties` (graft.* keys are engine
+  *       state and refuse), `add-schema` + `set-current-schema` (lowered
+  *       by field-id diff onto graft's metadata-only evolution,
+  *       [[SchemaEvolution]]: add / rename / widen / drop, with native
+  *       ALTER's guards), `add-partition-spec` + `set-default-spec`, and
+  *       tag `set-snapshot-ref` / `remove-snapshot-ref`. Sort orders,
+  *       statistics pointers, `remove-snapshots`, an
+  *       `upgrade-format-version` to the served version and an
+  *       `assign-uuid` of the served uuid are validated no-ops; a
+  *       member with no update at all refuses 400.
+  *     - A posted snapshot's manifest list is walked with
+  *       [[IcebergImport]]; files already under the repo's data plane
+  *       register ZERO-COPY (served metadata stamps `write.data.path`
+  *       inside the data plane, so compliant writers stage there), others
+  *       are copied in from the table's served location; FileEntry stats
+  *       come from O(new files) parquet footer reads — no Spark job, no
+  *       data scan. `append` may not drop base files and may ride an
+  *       `add-schema` (evolve+append); `overwrite`/`delete` is the
+  *       engine's copy-on-write rewrite (dropped base files leave the
+  *       live set, added files register at the table's next sequence);
+  *       EQUALITY delete files (content=2) lower onto ONE graft predicate
+  *       tombstone with same-commit adds exempt (the spec's
+  *       strictly-lower rule — the Flink-upsert shape); POSITIONAL
+  *       delete files and v3 DELETION VECTORS lower onto a server-side
+  *       CoW rewrite of exactly the referenced files, which equality
+  *       deletes and same-commit adds may ride; `replace` is the
+  *       engine's own compaction, landed as a structural compaction
+  *       commit.
+  *     - An `assert-create` member publishes a STAGED CREATE: schema,
+  *       spec, properties and the first snapshot land together, and of
+  *       concurrent creators exactly one wins.
+  *     - A `set-snapshot-ref` to a prior served snapshot, with no
+  *       snapshot, schema or property update beside it, is an engine
+  *       ROLLBACK: a zero-copy pointer swap, or a file-set revert across
+  *       a metadata change.
+  *     - Rollbacks, replaces, tag writes and partition-spec changes must
+  *       be a commit's only member.
+  *     - What refuses loudly with 400: NULL-valued or oversized
+  *       (> [[IcebergExport.MaxEqualityRows]]) equality deletes,
+  *       positional deletes referencing files neither live at the base
+  *       nor added by the commit, CoW file drops mixed with MoR deletes,
+  *       schema changes on a non-append snapshot, a snapshot `schema-id`
+  *       the commit neither serves nor adds (nor an earlier transaction
+  *       recorded for the current schema), an unreadable manifest
+  *       list, and a replace that adds delete files or changes the live
+  *       row count beyond what its retired deletes masked.
   *  - `DELETE .../tables/{t}` drops (optionally `purgeRequested=true`
   *    with the engine catalog's purge semantics); `POST /tables/rename`
   *    re-keys the commit map in one metadata commit, same-branch only
@@ -153,6 +164,8 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     maxSnapshots: Int, formatVersion: Int, writable: Boolean,
     token: Option[String], credential: Option[String], oauthTtlSec: Long,
     server: HttpServer) {
+
+  import IcebergRestServer._
 
   def port: Int = server.getAddress.getPort
 
@@ -355,7 +368,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
         replyError(ex, 409, "CommitFailedException",
           Option(e.getMessage).getOrElse("commit conflict"))
       case e: MergeConflictException =>
-        // commitRewrite's concurrent-rewrite validation (a dropped file
+        // a replace's concurrent-rewrite validation (a dropped file
         // already rewritten away by another committer) is a refresh-and-
         // retry signal too, not an internal error
         replyError(ex, 409, "CommitFailedException",
@@ -752,7 +765,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     * (schema, spec, location, `write.data.path`) is all an engine
     * needs to write the CTAS data; the table materializes atomically
     * when the engine posts the staged commit (requirement
-    * `assert-create` — [[commitStagedCreate]]). A stage that is never
+    * `assert-create` — [[stageCreate]]). A stage that is never
     * committed leaves NOTHING behind.
     */
   private def createTable(repo: GraftRepo, prefix: Option[String],
@@ -772,12 +785,8 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     val schemaNode = Option(req.get("schema")).getOrElse(
       throw new IllegalArgumentException("create carries no schema"))
     val schema = IcebergImport.structOf(schemaNode)
-    val idToName = Option(schemaNode.get("fields")).toSeq
-      .flatMap(_.elements().asScala).map(fieldIdName).toMap
     val spec = Option(req.get("partition-spec"))
-      .map(n => Option(n.get("fields")).getOrElse(n)) // spec object or bare list
-      .map(_.elements().asScala.map(partitionFieldOf(_, idToName)).toSeq)
-      .getOrElse(Nil)
+      .map(partitionSpecOf(_, idToNameOf(schemaNode))).getOrElse(Nil)
     TableOps.validateSpec(schema, spec)
     val props = Option(req.get("properties")).map(_.fields().asScala
       .map(e => e.getKey -> e.getValue.asText()).toMap)
@@ -809,14 +818,13 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     * spec's marker that the metadata is staged, not committed); the
     * served `location` and `write.data.path` point where a compliant
     * engine stages the CTAS data files, which the staged commit
-    * ([[commitStagedCreate]]) then registers zero-copy.
+    * ([[stageCreate]]) then registers zero-copy.
     */
   private def stagedCreateResult(repo: GraftRepo, prefix: Option[String],
       ref: String, key: String,
       schema: org.apache.spark.sql.types.StructType,
       spec: Seq[PartitionField], props: Map[String, String]): ObjectNode = {
-    val destRoot = prefix.fold(exportRoot)(exportRoot.resolve)
-      .resolve(ref).resolve(key).toAbsolutePath.normalize
+    val destRoot = tableRoot(prefix, ref, key)
     val schemaNode = mapper.readTree(
       IcebergExport.icebergSchemaJson(schema)).asInstanceOf[ObjectNode]
     schemaNode.put("schema-id", 0)
@@ -892,16 +900,74 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     }
   }
 
-  /** CommitTableRequest → graft commit (class doc: WRITE PATH).
-    * Dispatch: an existing table takes the append / CoW-rewrite /
-    * MoR-equality-delete / schema-update path; an absent table commits
-    * only with an `assert-create` requirement — the spec's staged
-    * CREATE (CTAS) publish, which creates the table and its first
-    * snapshot in ONE graft commit.
-    */
+  // ---- the commit pipeline: parse → validate → stage → publish ----------
+
+  /** `POST .../tables/{t}`: a one-member transaction, answered with the
+    * table's refreshed LoadTableResult. */
   private def commitTable(repo: GraftRepo, prefix: Option[String],
-      ns: Seq[String], name: String,
-      req: com.fasterxml.jackson.databind.JsonNode): ObjectNode = {
+      ns: Seq[String], name: String, req: JsonNode): ObjectNode = {
+    val c = parseChange(repo, ns, name, req)
+    commitChanges(repo, prefix, transaction = false, Seq(c))
+    loadResult(serve(repo, prefix, c.ref, c.key))
+  }
+
+  /** `POST /v1/transactions/commit`: every table-change lands in ONE
+    * graft commit, so fact + dimension appends publish together or not
+    * at all — the repo-level transactionality the reference inherits
+    * from lakeFS, which per-table Iceberg catalogs cannot give. */
+  private def commitTransaction(repo: GraftRepo, prefix: Option[String],
+      req: JsonNode): Unit = {
+    val changes = Option(req.get("table-changes")).toSeq
+      .flatMap(_.elements().asScala).map { ch =>
+        val ident = Option(ch.get("identifier")).getOrElse(
+          throw new IllegalArgumentException(
+            "table-change carries no identifier"))
+        parseChange(repo, Option(ident.get("namespace")).toSeq
+          .flatMap(_.elements().asScala).map(_.asText()),
+          text(ident, "name"), ch)
+      }
+    if (changes.isEmpty) throw new IllegalArgumentException(
+      "transaction carries no table-changes")
+    commitChanges(repo, prefix, transaction = true, changes)
+  }
+
+  /** The integer-field requirements iceberg-core's UpdateRequirements
+    * posts: type → (posted field, served field, served default, what
+    * the conflict message calls it). graft serves sort order 0 always
+    * (orders are advisory); the spec pair rides every
+    * partition-evolution commit. */
+  private val fieldRequirements = Map(
+    "assert-current-schema-id" ->
+      ("current-schema-id", "current-schema-id", 0, "current schema"),
+    "assert-last-assigned-field-id" -> ("last-assigned-field-id",
+      "last-column-id", 0, "last assigned field id"),
+    "assert-default-sort-order-id" -> ("default-sort-order-id",
+      "default-sort-order-id", 0, "default sort order"),
+    "assert-default-spec-id" ->
+      ("default-spec-id", "default-spec-id", 0, "default partition spec"),
+    "assert-last-assigned-partition-id" -> ("last-assigned-partition-id",
+      "last-partition-id", 999, "last assigned partition field id"))
+
+  private def requirementOf(r: JsonNode): Requirement = text(r, "type") match {
+    case "assert-create" => AssertCreate
+    case "assert-table-uuid" => AssertUuid(text(r, "uuid"))
+    case "assert-ref-snapshot-id" => AssertRef(
+      Option(r.get("ref")).map(_.asText()).getOrElse("main"),
+      Option(r.get("snapshot-id")).filterNot(_.isNull).map(_.asLong()))
+    case t if fieldRequirements.contains(t) =>
+      val (posted, served, default, what) = fieldRequirements(t)
+      AssertField(served, default, what, Option(r.get(posted))
+        .map(_.asInt()).getOrElse(throw new IllegalArgumentException(
+          s"$t carries no $posted")))
+    case other => throw new UnsupportedOperationException(
+      s"unsupported commit requirement: $other")
+  }
+
+  /** Parse the change posted for table `ns`.`name` and resolve its
+    * target: 404 for a missing ref or table (unless the change asserts
+    * create), 409 for a create whose name is taken. */
+  private def parseChange(repo: GraftRepo, ns: Seq[String], name: String,
+      ch: JsonNode): Change = {
     val (ref, dirs) = ns match {
       case r +: ds if ds.nonEmpty => (r, ds)
       case _ => throw new NoSuchElementException(
@@ -912,663 +978,711 @@ final class IcebergRestServer private (single: Option[GraftRepo],
       throw new NoSuchElementException(s"no such table: $key @ $ref")
     if (!repo.branchExists(ref)) throw new IllegalArgumentException(
       s"commits target a branch; $ref is a tag")
-    val reqs = Option(req.get("requirements")).toSeq
-      .flatMap(_.elements().asScala).toSeq
-    if (!repo.resolve(ref).tables.contains(key)) {
-      if (reqs.exists(r => text(r, "type") == "assert-create"))
-        return commitStagedCreate(repo, prefix, ref, dirs, key, reqs, req)
+    val reqs = Option(ch.get("requirements")).toSeq
+      .flatMap(_.elements().asScala).map(requirementOf)
+    val create = reqs.contains(AssertCreate)
+    val exists = repo.resolve(ref).tables.contains(key)
+    // definitive, not retryable: the CTAS lost its race (or the name was
+    // taken all along) — the same answer the in-commit race gives
+    if (create && exists) throw new RestConflict("AlreadyExistsException",
+      s"table already exists: $key @ $ref")
+    if (!create && !exists)
       throw new NoSuchElementException(s"no such table: $key @ $ref")
+    Option(ch.get("updates")).toSeq.flatMap(_.elements().asScala)
+      .foldLeft(Change(ref, dirs, key, create, reqs))(withUpdate)
+  }
+
+  /** graft.* table properties are engine state (MoR tombstones, commit
+    * sequence, staging markers): a REST client rewriting them could
+    * resurrect deleted rows — same guard as native ALTER's SetProperty. */
+  private def guardProp(k: String): String = {
+    if (k.startsWith("graft."))
+      throw new UnsupportedOperationException(
+        s"$k is engine-managed graft state; not settable over REST")
+    k
+  }
+
+  /** Fold one posted metadata update into `c`: the whole REST update
+    * vocabulary (class doc: WRITE PATH). */
+  private def withUpdate(c: Change, u: JsonNode): Change =
+    text(u, "action") match {
+      case "add-snapshot" =>
+        if (c.snapshot.isDefined) throw new UnsupportedOperationException(
+          "one add-snapshot per commit")
+        c.copy(snapshot = Some(Option(u.get("snapshot")).getOrElse(
+          throw new IllegalArgumentException(
+            "add-snapshot carries no snapshot"))))
+      case "set-snapshot-ref" =>
+        val rn = Option(u.get("ref-name")).map(_.asText()).getOrElse("main")
+        val sid = Option(u.get("snapshot-id")).filterNot(_.isNull)
+          .map(_.asLong())
+        if (rn == "main") c.copy(mainRef = sid)
+        else if (Option(u.get("type")).map(_.asText()).contains("tag"))
+          // Spark's ALTER TABLE ... CREATE TAG (ManageSnapshots.createTag)
+          c.copy(tagCreate = Some(rn -> sid.getOrElse(
+            throw new IllegalArgumentException(
+              s"set-snapshot-ref tag $rn carries no snapshot-id"))))
+        else throw new UnsupportedOperationException(
+          s"named BRANCH refs are repo-level in graft — create a " +
+            s"graft branch and address it as its own namespace " +
+            s"(ref $rn); only TAG refs can be written per-table")
+      case "remove-snapshot-ref" =>
+        val rn = text(u, "ref-name")
+        if (rn == "main") throw new IllegalArgumentException(
+          "cannot remove the main ref")
+        c.copy(tagRemove = Some(rn))
+      case "set-properties" =>
+        c.copy(setProps = c.setProps ++ Option(u.get("updates")).toSeq
+          .flatMap(_.fields().asScala)
+          .map(e => guardProp(e.getKey) -> e.getValue.asText()))
+      case "remove-properties" =>
+        c.copy(removeProps = c.removeProps ++ Option(u.get("removals"))
+          .toSeq.flatMap(_.elements().asScala)
+          .map(n => guardProp(n.asText())))
+      case "add-schema" =>
+        if (c.schema.isDefined) throw new UnsupportedOperationException(
+          "one add-schema per commit")
+        c.copy(schema = Some(Option(u.get("schema")).getOrElse(
+          throw new IllegalArgumentException("add-schema carries no schema"))))
+      case "set-current-schema" =>
+        c.copy(currentSchema =
+          Some(Option(u.get("schema-id")).map(_.asInt()).getOrElse(-1)))
+      case "add-partition-spec" =>
+        if (c.spec.isDefined) throw new UnsupportedOperationException(
+          "one add-partition-spec per commit")
+        c.copy(spec = Option(u.get("spec")).orElse(Some(u)))
+      case "set-default-spec" => c.copy(defaultSpec = true)
+      // a staged create's location: graft assigns its own
+      case "set-location" => c.copy(location = true)
+      // upgrading to the version ALREADY SERVED is a validated no-op
+      // (iceberg-core posts it defensively); so is assigning the served
+      // uuid — both are checked against the served metadata
+      case "upgrade-format-version" =>
+        c.copy(formatVersion = Some(
+          Option(u.get("format-version")).map(_.asInt()).getOrElse(
+            throw new IllegalArgumentException(
+              "upgrade-format-version carries no format-version"))))
+      case "assign-uuid" =>
+        c.copy(uuid = Some(text(u, "uuid")))
+      // graft tables have no sort orders: an engine's declared order is
+      // advisory (write-side clustering). ANALYZE TABLE's Puffin
+      // statistics pointers are discarded (graft computes its own stats
+      // — snapshot metadata + footer NDV). expire_snapshots' remove-
+      // snapshots defers to graft's own expire/vacuum (the served
+      // history is maxSnapshots-bounded anyway). Failing an engine's
+      // maintenance job over advisory metadata would be worse than not
+      // serving it back.
+      case "add-sort-order" | "set-default-sort-order" | "set-statistics" |
+           "remove-statistics" | "set-partition-statistics" |
+           "remove-partition-statistics" | "remove-snapshots" =>
+        c.copy(advisory = true)
+      case other => throw new UnsupportedOperationException(
+        s"unsupported metadata update over REST: $other (supported: " +
+          "add-snapshot + set-snapshot-ref + set-properties + " +
+          "remove-properties + add-schema + set-current-schema + " +
+          "add-partition-spec + set-default-spec + advisory sort " +
+          "orders / statistics / remove-snapshots)")
     }
-    val metaPath = serve(repo, prefix, ref, key)
-    val served = mapper.readTree(Files.readString(metaPath))
-    val servedGraftSnap =
-      served.get("properties").get("graft.source-snapshot").asText()
-    val servedSnapId = Option(served.get("current-snapshot-id"))
-      .map(_.asLong()).filter(_ != -1L)
-    val servedSchemaId =
-      Option(served.get("current-schema-id")).map(_.asInt()).getOrElse(0)
 
-    // ---- requirements: against the served state now, re-checked
-    // against the branch head inside the commit race (precheck below)
-    reqs.foreach { r =>
-        text(r, "type") match {
-          case "assert-table-uuid" =>
-            val want = text(r, "uuid")
-            val have = served.get("table-uuid").asText()
-            if (want != have) throw new RestConflict("CommitFailedException",
-              s"table uuid changed: expected $want, found $have")
-          case "assert-ref-snapshot-id" =>
-            val rn = Option(r.get("ref")).map(_.asText()).getOrElse("main")
-            val want = Option(r.get("snapshot-id")).filterNot(_.isNull)
-              .map(_.asLong())
-            if (rn == "main") {
-              if (want != servedSnapId)
-                throw new RestConflict("CommitFailedException",
-                  s"branch main moved: expected snapshot ${want.getOrElse("<none>")}, " +
-                    s"now at ${servedSnapId.getOrElse("<none>")}")
-            } else {
-              // a NAMED ref requirement (iceberg-core posts snapshot-id
-              // null on createTag: "the ref must not exist yet"):
-              // validate against the served refs map, which bakes graft
-              // tag state in
-              val have = Option(served.get("refs"))
-                .flatMap(rs => Option(rs.get(rn)))
-                .flatMap(n => Option(n.get("snapshot-id"))).map(_.asLong())
-              if (want != have)
-                throw new RestConflict("CommitFailedException",
-                  s"ref $rn changed: expected ${want.getOrElse("<none>")}, " +
-                    s"now at ${have.getOrElse("<none>")}")
-            }
-          case "assert-current-schema-id" =>
-            val want = Option(r.get("current-schema-id")).map(_.asInt())
-              .getOrElse(throw new IllegalArgumentException(
-                "assert-current-schema-id carries no current-schema-id"))
-            if (want != servedSchemaId)
-              throw new RestConflict("CommitFailedException",
-                s"current schema changed: expected $want, found $servedSchemaId")
-          case "assert-last-assigned-field-id" =>
-            val want = Option(r.get("last-assigned-field-id")).map(_.asInt())
-              .getOrElse(throw new IllegalArgumentException(
-                "assert-last-assigned-field-id carries no last-assigned-field-id"))
-            val have = Option(served.get("last-column-id")).map(_.asInt()).getOrElse(0)
-            if (want != have)
-              throw new RestConflict("CommitFailedException",
-                s"last assigned field id changed: expected $want, found $have")
-          case "assert-default-sort-order-id" =>
-            // graft serves sort-order 0 always (orders are advisory) —
-            // validate so an engine's sort-order commit round-trips
-            val want = Option(r.get("default-sort-order-id"))
-              .map(_.asInt()).getOrElse(
-                throw new IllegalArgumentException(
-                  "assert-default-sort-order-id carries no " +
-                    "default-sort-order-id"))
-            val have = Option(served.get("default-sort-order-id"))
-              .map(_.asInt()).getOrElse(0)
-            if (want != have)
-              throw new RestConflict("CommitFailedException",
-                s"default sort order changed: expected $want, found $have")
-          case "assert-default-spec-id" =>
-            // iceberg-core's UpdateRequirements posts these two on every
-            // partition-evolution commit — a real engine's ALTER TABLE
-            // ADD PARTITION FIELD must not 400 on the requirement
-            val want = Option(r.get("default-spec-id")).map(_.asInt())
-              .getOrElse(throw new IllegalArgumentException(
-                "assert-default-spec-id carries no default-spec-id"))
-            val have = Option(served.get("default-spec-id"))
-              .map(_.asInt()).getOrElse(0)
-            if (want != have)
-              throw new RestConflict("CommitFailedException",
-                s"default partition spec changed: expected $want, found $have")
-          case "assert-last-assigned-partition-id" =>
-            val want = Option(r.get("last-assigned-partition-id"))
-              .map(_.asInt())
-              .getOrElse(throw new IllegalArgumentException(
-                "assert-last-assigned-partition-id carries no " +
-                  "last-assigned-partition-id"))
-            val have = Option(served.get("last-partition-id"))
-              .map(_.asInt()).getOrElse(999)
-            if (want != have)
-              throw new RestConflict("CommitFailedException",
-                s"last assigned partition field id changed: " +
-                  s"expected $want, found $have")
-          case "assert-create" =>
-            // definitive, not retryable: the CTAS lost its race (or the
-            // name was taken all along) — same answer the in-commit
-            // race gives, so the losing engine sees ONE failure shape
-            throw new RestConflict("AlreadyExistsException",
-              s"table already exists: $key @ $ref")
-          case other => throw new UnsupportedOperationException(
-            s"unsupported commit requirement: $other")
-        }
+  /** Validate every change against its served state, stage them all,
+    * then publish in ONE graft commit: every member lands or none does,
+    * and any member's stale base 409s the whole commit. All changes
+    * target one branch (a graft commit is per-branch) and name each
+    * table once. Rollbacks, replaces, tag writes and partition-spec
+    * changes must be a commit's only member. Validation and staging run
+    * on up to 3 driver threads ([[TableOps.stageConcurrently]]): each
+    * member touches its own table and `serve` locks per table; the
+    * first failing member's error wins, and siblings' already-staged
+    * files are orphans until vacuum. `transaction` marks the route that
+    * answers without metadata, the one that records an engine's schema
+    * ids ([[IcebergRestServer.SchemaIdProp]]).
+    */
+  private def commitChanges(repo: GraftRepo, prefix: Option[String],
+      transaction: Boolean, changes: Seq[Change]): Unit = {
+    val refs = changes.map(_.ref).distinct
+    if (refs.size != 1) throw new IllegalArgumentException(
+      s"a transaction commits to ONE branch; got ${refs.mkString(", ")} " +
+        "— post per-branch transactions")
+    val dupKeys = changes.groupBy(_.key).filter(_._2.size > 1).keys
+    if (dupKeys.nonEmpty) throw new IllegalArgumentException(
+      s"a transaction names each table once; duplicated: " +
+        dupKeys.mkString(", "))
+    val members = TableOps.stageConcurrently(changes)(
+      validate(repo, prefix, transaction, _))
+    if (members.size > 1) members.flatMap(_.only).headOption.foreach { k =>
+      throw new UnsupportedOperationException(
+        s"$k is its own commit over REST: post it as the only member " +
+          "of a transaction")
+    }
+    val staged = TableOps.stageConcurrently(members)(_.stage())
+    if (staged.exists(_.writes))
+      repo.commitRetry(refs.head,
+        if (staged.size == 1) staged.head.message
+        else s"rest: transaction (${staged.map(_.key).mkString(", ")})",
+        marker = staged.flatMap(_.marker).headOption) { base =>
+        (staged.foldLeft(base.tables)((acc, st) => st.fold(base, acc)),
+          staged.flatMap(_.namespace).foldLeft(base.namespaces) { (acc, d) =>
+            if (acc.contains(d)) acc else acc + (d -> Map.empty[String, String])
+          })
       }
+  }
 
-    // ---- updates: at most one add-snapshot (+ its set-snapshot-ref),
-    // at most one add-schema (+ set-current-schema) — the spec's
-    // schema-evolution commit, lowered onto graft's metadata-only
-    // evolution (reference parity: LakeFSTableOperations.commit,
-    // java:115-147, accepts ANY metadata swap — schema changes
-    // included) — and optional set-properties; anything else refuses
-    var snapNode: Option[com.fasterxml.jackson.databind.JsonNode] = None
-    var newSchemaNode: Option[com.fasterxml.jackson.databind.JsonNode] = None
-    var newSpecNode: Option[com.fasterxml.jackson.databind.JsonNode] = None
-    var sawSetDefaultSpec = false
-    var setCurrentSchema: Option[Int] = None
-    var sawAdvisory = false
-    var setRefTarget: Option[Long] = None
-    var tagCreate: Option[(String, Long)] = None
-    var tagRemove: Option[String] = None
-    var setProps = Map.empty[String, String]
-    var removeProps = Set.empty[String]
-    // graft.* table properties are engine state (MoR tombstones, commit
-    // sequence, staging markers): a REST client rewriting them could
-    // resurrect deleted rows — same guard as native ALTER's SetProperty
-    def guardProp(k: String): String = {
-      if (k.startsWith("graft."))
+  /** Check a change against the served metadata — requirements (409),
+    * then the update shape (400) — and decide its member kind. */
+  private def validate(repo: GraftRepo, prefix: Option[String],
+      transaction: Boolean, c: Change): Member = {
+    if (c.create) {
+      if (c.reqs.exists(_ != AssertCreate))
         throw new UnsupportedOperationException(
-          s"$k is engine-managed graft state; not settable over REST")
-      k
+          "a staged create carries no requirement but assert-create")
+      if (c.tagCreate.isDefined || c.tagRemove.isDefined)
+        throw new UnsupportedOperationException(
+          "a staged create writes no tag refs")
+      return Member(None, () => stageCreate(repo, prefix, c))
     }
-    Option(req.get("updates")).toSeq
-      .flatMap(_.elements().asScala).foreach { u =>
-        text(u, "action") match {
-          case "add-snapshot" =>
-            if (snapNode.isDefined) throw new UnsupportedOperationException(
-              "one add-snapshot per commit")
-            snapNode = Some(Option(u.get("snapshot")).getOrElse(
-              throw new IllegalArgumentException(
-                "add-snapshot carries no snapshot")))
-          case "set-snapshot-ref" =>
-            val rn = Option(u.get("ref-name")).map(_.asText()).getOrElse("main")
-            val rt = Option(u.get("type")).map(_.asText()).getOrElse("branch")
-            if (rn == "main")
-              setRefTarget = Option(u.get("snapshot-id")).filterNot(_.isNull)
-                .map(_.asLong())
-            else if (rt == "tag")
-              // named TAG ref write (Spark's ALTER TABLE ... CREATE TAG,
-              // ManageSnapshots.createTag): lowers onto a graft repo tag
-              // at the commit where this table served the named snapshot
-              // — handled as its own commit below
-              tagCreate = Some((rn, Option(u.get("snapshot-id"))
-                .filterNot(_.isNull).map(_.asLong()).getOrElse(
-                  throw new IllegalArgumentException(
-                    s"set-snapshot-ref tag $rn carries no snapshot-id"))))
-            else throw new UnsupportedOperationException(
-              s"named BRANCH refs are repo-level in graft — create a " +
-                s"graft branch and address it as its own namespace " +
-                s"(ref $rn); only TAG refs can be written per-table")
-          case "remove-snapshot-ref" =>
-            val rn = text(u, "ref-name")
-            if (rn == "main") throw new IllegalArgumentException(
-              "cannot remove the main ref")
-            tagRemove = Some(rn)
-          case "set-properties" =>
-            setProps ++= Option(u.get("updates")).toSeq
-              .flatMap(_.fields().asScala)
-              .map(e => guardProp(e.getKey) -> e.getValue.asText())
-          case "remove-properties" =>
-            removeProps ++= Option(u.get("removals")).toSeq
-              .flatMap(_.elements().asScala).map(n => guardProp(n.asText()))
-          case "add-schema" =>
-            if (newSchemaNode.isDefined) throw new UnsupportedOperationException(
-              "one add-schema per commit")
-            newSchemaNode = Some(Option(u.get("schema")).getOrElse(
-              throw new IllegalArgumentException(
-                "add-schema carries no schema")))
-          case "set-current-schema" =>
-            setCurrentSchema = Some(Option(u.get("schema-id")).map(_.asInt())
-              .getOrElse(-1))
-          case "add-partition-spec" =>
-            if (newSpecNode.isDefined) throw new UnsupportedOperationException(
-              "one add-partition-spec per commit")
-            newSpecNode = Option(u.get("spec")).orElse(Some(u))
-          case "set-default-spec" =>
-            sawSetDefaultSpec = true
-          // graft tables have no sort orders; an engine's declared
-          // order is advisory (write-side clustering) and drops here
-          // exactly as it does on a staged CREATE — the served
-          // default-sort-order-id stays 0
-          case "add-sort-order" | "set-default-sort-order" =>
-            sawAdvisory = true
-          // an engine's ANALYZE TABLE posts Puffin statistics-file
-          // pointers; graft computes its own stats (snapshot metadata +
-          // footer NDV), so the pointers are accepted and discarded —
-          // failing the engine's ANALYZE over optional advisory
-          // metadata would be worse than not serving it back
-          case "set-statistics" | "remove-statistics" |
-               "set-partition-statistics" | "remove-partition-statistics" =>
-            sawAdvisory = true // same validated-no-op return path
-          // an engine's expire_snapshots posts remove-snapshots; graft
-          // is a VERSIONED catalog — history retention is governed by
-          // graft's own expire/vacuum (branch semantics), and the
-          // served history depth is maxSnapshots-bounded anyway, so the
-          // request is accepted as a validated no-op rather than
-          // failing the engine's maintenance job
-          case "remove-snapshots" =>
-            sawAdvisory = true
-          // upgrading to the version ALREADY SERVED is a validated
-          // no-op (iceberg-core posts it defensively); an actual
-          // version change is server configuration, not table state
-          case "upgrade-format-version" =>
-            val want = Option(u.get("format-version")).map(_.asInt())
-              .getOrElse(throw new IllegalArgumentException(
-                "upgrade-format-version carries no format-version"))
-            val have = Option(served.get("format-version")).map(_.asInt())
-              .getOrElse(2)
-            if (want != have) throw new UnsupportedOperationException(
-              s"this server serves format-version $have; start the " +
-                s"REST server with formatVersion=$want to change it " +
-                "(a graft table has no per-table format version)")
-            sawAdvisory = true
-          // assign-uuid matching the served identity is a no-op; a
-          // different uuid is a client addressing bug
-          case "assign-uuid" =>
-            val want = text(u, "uuid")
-            val have = Option(served.get("table-uuid")).map(_.asText())
-              .getOrElse("")
-            if (want != have) throw new IllegalArgumentException(
-              s"assign-uuid $want does not match the table's identity " +
-                s"$have")
-            sawAdvisory = true
-          case other => throw new UnsupportedOperationException(
-            s"unsupported metadata update over REST: $other (supported: " +
-              "add-snapshot + set-snapshot-ref + set-properties + " +
-              "remove-properties + add-schema + set-current-schema + " +
-              "add-partition-spec + set-default-spec + advisory sort " +
-              "orders / statistics / remove-snapshots)")
-        }
-      }
-    // set-current-schema must point at the schema this commit added
-    // (-1 = "last added", the form engines post) or the served current
-    setCurrentSchema.foreach { sid =>
-      val addedId = newSchemaNode.flatMap(s =>
-        Option(s.get("schema-id")).map(_.asInt()))
-      if (sid != -1 && !addedId.contains(sid) && sid != servedSchemaId)
+    val path = serve(repo, prefix, c.ref, c.key)
+    val meta = mapper.readTree(Files.readString(path))
+    val sv = Served(c.ref, c.key, path, meta,
+      meta.get("properties").get("graft.source-snapshot").asText(),
+      Option(meta.get("current-snapshot-id")).map(_.asLong())
+        .filter(_ != -1L),
+      Option(meta.get("current-schema-id")).map(_.asInt()).getOrElse(0))
+    c.reqs.foreach {
+      case AssertUuid(want) =>
+        val have = meta.get("table-uuid").asText()
+        if (want != have) throw new RestConflict("CommitFailedException",
+          s"table uuid of ${c.key} changed: expected $want, found $have")
+      case AssertRef(rn, want) =>
+        // a NAMED ref (iceberg-core posts snapshot-id null on createTag:
+        // "the ref must not exist yet") validates against the served
+        // refs map, which bakes graft tag state in
+        val have = if (rn == "main") sv.snapId
+          else Option(meta.get("refs")).flatMap(rs => Option(rs.get(rn)))
+            .flatMap(n => Option(n.get("snapshot-id"))).map(_.asLong())
+        if (want != have) throw new RestConflict("CommitFailedException",
+          s"ref $rn of ${c.key} moved: expected " +
+            s"${want.getOrElse("<none>")}, now at ${have.getOrElse("<none>")}")
+      case AssertField(field, default, what, want) =>
+        val have = Option(meta.get(field)).map(_.asInt()).getOrElse(default)
+        if (want != have) throw new RestConflict("CommitFailedException",
+          s"$what of ${c.key} changed: expected $want, found $have")
+      case AssertCreate => () // resolved by parseChange
+    }
+    c.formatVersion.foreach { want =>
+      val have = Option(meta.get("format-version")).map(_.asInt())
+        .getOrElse(2)
+      if (want != have) throw new UnsupportedOperationException(
+        s"this server serves format-version $have; start the REST " +
+          s"server with formatVersion=$want to change it (a graft table " +
+          "has no per-table format version)")
+    }
+    c.uuid.foreach { want =>
+      val have = Option(meta.get("table-uuid")).map(_.asText()).getOrElse("")
+      if (want != have) throw new IllegalArgumentException(
+        s"assign-uuid $want does not match the table's identity $have")
+    }
+    if (c.location) throw new UnsupportedOperationException(
+      "unsupported metadata update over REST: set-location (graft " +
+        "assigns table locations)")
+    // a schema id the engine may hold for the current schema: the served
+    // one, one this commit adds, or the one a transaction recorded for it
+    val addedSchemaId =
+      c.schema.flatMap(s => Option(s.get("schema-id")).map(_.asInt()))
+    lazy val cur = repo.snapshot(sv.graftSnap)
+    def knownSchema(sid: Int): Boolean =
+      sid == sv.schemaId || addedSchemaId.contains(sid) ||
+        cur.properties.get(SchemaIdProp)
+          .contains(schemaIdRecord(sid, cur.schemaJson))
+    // set-current-schema must point at a known schema (-1 = "last
+    // added", the form engines post)
+    c.currentSchema.foreach { sid =>
+      if (sid != -1 && !knownSchema(sid))
         throw new IllegalArgumentException(
           s"set-current-schema references schema-id $sid, which this " +
             "commit does not add")
     }
-    // lower the posted Iceberg schema onto graft TableChanges by FIELD
-    // ID diff against the served schema (field ids are the identity
-    // Iceberg evolution preserves)
-    val schemaChanges: Seq[org.apache.spark.sql.connector.catalog.TableChange] =
-      newSchemaNode.map { n =>
-        val cur = Option(served.get("schemas"))
-          .map(_.elements().asScala.toSeq).getOrElse(Nil)
-          .find(s => Option(s.get("schema-id")).exists(_.asInt() == servedSchemaId))
-          .getOrElse(throw new IllegalStateException(
-            s"served metadata has no schema $servedSchemaId"))
-        schemaChangesOf(cur, n)
-      }.getOrElse(Nil)
-
-    val pin: graft.versioned.Commit => Unit =
-      b => if (!b.tables.get(key).contains(servedGraftSnap))
-        throw new RestConflict("CommitFailedException",
-          s"branch $ref moved since the served base — refresh and retry")
-    val head = repo.snapshot(repo.resolve(ref).tables(key))
-
-    // set-default-spec must point at the spec THIS commit adds: graft
-    // stores exactly one current spec, so switching back to a
-    // previously-added spec id is not representable — ignoring it
-    // would let an engine believe a spec flip it never got
-    if (sawSetDefaultSpec && newSpecNode.isEmpty)
+    // the posted schema lowers onto graft TableChanges by FIELD ID diff
+    // against the served schema (field ids are the identity Iceberg
+    // evolution preserves)
+    val schemaChanges =
+      c.schema.map(schemaChangesOf(currentSchemaOf(sv), _)).getOrElse(Nil)
+    // the fold pins its base to the served snapshot, so the schema it
+    // will write is known here
+    lazy val evolved =
+      if (schemaChanges.isEmpty || !transaction) c
+      else c.copy(setProps = c.setProps ++ addedSchemaId.map(id =>
+        SchemaIdProp -> schemaIdRecord(id,
+          SchemaEvolution.evolve(cur, schemaChanges).schema.json)))
+    // graft stores exactly one current spec, so switching back to a
+    // previously-added spec id is not representable — ignoring it would
+    // let an engine believe a spec flip it never got
+    if (c.defaultSpec && c.spec.isEmpty)
       throw new UnsupportedOperationException(
         "set-default-spec without add-partition-spec: graft keeps ONE " +
           "current partition spec — post the full add-partition-spec " +
           "for the layout you want")
-
-    // ---- partition-spec evolution (ALTER TABLE ADD PARTITION FIELD
-    // over REST): its own metadata-only commit, lowered onto graft's
-    // forward-only spec swap (TableOps.setPartitionSpec — old files
-    // keep their recorded values, name-reuse rebinds to fresh names)
-    if (newSpecNode.isDefined) {
-      if (snapNode.isDefined || newSchemaNode.isDefined)
+    if (c.spec.isDefined) {
+      if (c.snapshot.isDefined || c.schema.isDefined)
         throw new UnsupportedOperationException(
           "a partition-spec change is its own commit over REST " +
             "(no add-snapshot / add-schema alongside)")
-      val curSchemaNode = Option(served.get("schemas"))
-        .map(_.elements().asScala.toSeq).getOrElse(Nil)
-        .find(s => Option(s.get("schema-id")).exists(_.asInt() == servedSchemaId))
-        .getOrElse(throw new IllegalStateException(
-          s"served metadata has no schema $servedSchemaId"))
-      val idToName = Option(curSchemaNode.get("fields")).toSeq
-        .flatMap(_.elements().asScala).map(fieldIdName).toMap
-      val spec = newSpecNode
-        .map(n => Option(n.get("fields")).getOrElse(n))
-        .map(_.elements().asScala.map(partitionFieldOf(_, idToName)).toSeq)
-        .getOrElse(Nil)
-      TableOps.setPartitionSpec(repo, ref, key, spec, precheck = pin,
-        setProps = setProps, removeProps = removeProps)
-      return loadResult(serve(repo, prefix, ref, key))
+      return Member(Some("a partition-spec change"),
+        () => stageSpec(repo, c, sv))
     }
-
-    // ---- TAG ref writes (set-snapshot-ref type=tag / remove-snapshot-
-    // ref): Spark's ALTER TABLE ... CREATE/DROP TAG lowers onto graft
-    // REPO tags — the created tag pins the newest first-parent commit
-    // where this table served the named snapshot (for "tag the current
-    // state", the head commit); the read side then serves it back in
-    // every exported table's refs map (an Iceberg tag means "the
-    // table's state at the tagged commit", so the repo-level scope is a
-    // superset, never a lie — SURVEY §6). Its own commit: combining a
-    // tag write with data/schema updates would entangle the tag with an
-    // uncommitted snapshot.
-    if (tagCreate.isDefined || tagRemove.isDefined) {
-      if (snapNode.isDefined || newSchemaNode.isDefined ||
-        newSpecNode.isDefined || setRefTarget.isDefined ||
-        setProps.nonEmpty || removeProps.nonEmpty)
+    // a tag write alongside data/schema updates would entangle the tag
+    // with an uncommitted snapshot
+    if (c.tagCreate.isDefined || c.tagRemove.isDefined) {
+      if (c.snapshot.isDefined || c.schema.isDefined ||
+        c.mainRef.isDefined || c.props)
         throw new UnsupportedOperationException(
           "tag ref writes are their own commit over REST — post other " +
             "updates separately")
-      tagCreate.foreach { case (name, sid) =>
-        // newest-first walk over ALL parents (bounded breadth-first),
-        // O(distance to target) commit loads — tag creation is
-        // control-plane rare, no memo needed. All parents, not just the
-        // first: a snapshot reachable only through a merge's SECOND
-        // parent is still one an engine observed via the served
-        // metadata, so it must be taggable (the first-parent-only walk
-        // 400'd it as "not a version"). A path stops at the table's
-        // creation commit (table absent → parents not walked).
-        val head = repo.resolve(ref)
-        val seen = scala.collection.mutable.HashSet[String](head.id)
-        val queue = scala.collection.mutable.Queue[graft.versioned.Commit](head)
-        var found: Option[String] = None
-        var hops = 0
-        while (found.isEmpty && queue.nonEmpty && hops < 100000) {
-          val c = queue.dequeue()
-          hops += 1
-          c.tables.get(key) match {
-            case Some(gid) if IcebergExport.icebergSnapshotId(gid) == sid =>
-              found = Some(c.id)
-            case Some(_) =>
-              c.parents.filter(seen.add).foreach(p => queue.enqueue(repo.commit(p)))
-            case None => ()
-          }
+      return Member(Some("a tag ref write"), () => stageTag(repo, c))
+    }
+    c.snapshot match {
+      case None if c.mainRef.exists(id => !sv.snapId.contains(id)) =>
+        if (c.schema.isDefined || c.props)
+          throw new UnsupportedOperationException(
+            "rollback (set-snapshot-ref to a prior snapshot) is its own " +
+              "commit over REST — post schema and property updates " +
+              "separately")
+        Member(Some("a rollback"),
+          () => stageRollback(repo, c, sv, c.mainRef.get))
+      case None if c.schema.isDefined || c.props =>
+        // a schema/property update (ALTER TABLE over REST)
+        Member(None, () => Staged(c.key, s"rest: update schema ${c.key}",
+          writes = true,
+          memberFold(repo, evolved, sv, Nil, None, Nil, schemaChanges)))
+      case None =>
+        // advisory updates, the served format version or uuid, a
+        // set-snapshot-ref to the current snapshot: a validated no-op.
+        // Anything else empty is a client bug.
+        if (!c.noOps) throw new IllegalArgumentException(
+          "commit carries no updates")
+        Member(None, () => Staged(c.key, "", writes = false,
+          (base, acc) => { sv.pin(base); acc }))
+      case Some(snap) =>
+        // a set-snapshot-ref riding an add-snapshot must name the ADDED
+        // snapshot (or the served current): a mismatched target would
+        // land the posted snapshot while the engine believes the ref
+        // moved somewhere else
+        val addedId = Option(snap.get("snapshot-id")).map(_.asLong())
+        c.mainRef.foreach { tgt =>
+          if (!addedId.contains(tgt) && !sv.snapId.contains(tgt))
+            throw new IllegalArgumentException(
+              s"set-snapshot-ref names snapshot $tgt, but this commit " +
+                s"adds ${addedId.getOrElse("<none>")} — post a rollback " +
+                "(bare set-snapshot-ref) or a consistent commit")
         }
-        val cid = found.getOrElse(throw new IllegalArgumentException(
-          s"set-snapshot-ref tag $name names snapshot $sid, which is " +
-            s"not a version of $key on $ref"))
-        if (repo.tagExists(name)) {
-          // IDEMPOTENT when the existing tag serves the SAME snapshot
-          // for this table (not same-commit: an unrelated commit can
-          // move head so a retried create resolves a different commit
-          // with the identical table state); a genuinely different
-          // target refuses — graft tags are immutable while they live
-          val sameState = scala.util.Try(repo.resolve(name)).toOption
-            .flatMap(_.tables.get(key))
-            .exists(g => IcebergExport.icebergSnapshotId(g) == sid)
-          if (!sameState)
-            throw new RestConflict("AlreadyExistsException",
-              s"tag already exists: $name")
-        } else repo.createTag(name, cid)
-      }
-      tagRemove.foreach { name =>
-        if (!repo.tagExists(name))
-          throw new NoSuchElementException(s"no such tag: $name")
-        repo.dropTag(name)
-      }
-      // tag state is baked into the serve memo's graft.source-tags
-      // signature, so this re-serve re-exports with the fresh refs map
-      return loadResult(serve(repo, prefix, ref, key))
+        val op = Option(snap.get("summary")).flatMap(s =>
+          Option(s.get("operation"))).map(_.asText()).getOrElse("append")
+        if (!Set("append", "overwrite", "delete", "replace")(op))
+          throw new UnsupportedOperationException(
+            s"unsupported commit operation over REST: '$op' (accepted: " +
+              "append, overwrite, delete, replace)")
+        // a snapshot written under the schema this same commit adds is
+        // fine; any OTHER unknown schema-id is a client bug
+        Option(snap.get("schema-id")).map(_.asInt()).foreach { sid =>
+          if (!knownSchema(sid))
+            throw new IllegalArgumentException(
+              s"snapshot schema-id $sid is not the served " +
+                s"current-schema-id ${sv.schemaId}, a schema this commit " +
+                "adds, or the id a transaction recorded for the current " +
+                "schema")
+        }
+        if (schemaChanges.nonEmpty && op != "append")
+          throw new UnsupportedOperationException(
+            "schema changes combine only with append commits over REST " +
+              "(post the schema update on its own, then the rewrite)")
+        Member(if (op == "replace") Some("a replace (compaction)") else None,
+          () => stageData(repo, prefix, evolved, sv, op, schemaChanges))
+    }
+  }
+
+  /** The served current schema node. */
+  private def currentSchemaOf(sv: Served): JsonNode =
+    Option(sv.meta.get("schemas")).map(_.elements().asScala.toSeq)
+      .getOrElse(Nil)
+      .find(s => Option(s.get("schema-id")).exists(_.asInt() == sv.schemaId))
+      .getOrElse(throw new IllegalStateException(
+        s"served metadata has no schema ${sv.schemaId}"))
+
+  /** field id → name of a posted Iceberg schema node. */
+  private def idToNameOf(schema: JsonNode): Map[Int, String] =
+    Option(schema.get("fields")).toSeq.flatMap(_.elements().asScala)
+      .map(fieldIdName).toMap
+
+  /** A posted partition spec (spec object or bare field list) → graft
+    * partition fields. */
+  private def partitionSpecOf(n: JsonNode,
+      idToName: Map[Int, String]): Seq[PartitionField] =
+    Option(n.get("fields")).getOrElse(n).elements().asScala
+      .map(partitionFieldOf(_, idToName)).toSeq
+
+  private def hadoopConf: org.apache.hadoop.conf.Configuration =
+    spark.map(_.sessionState.newHadoopConf())
+      .getOrElse(new org.apache.hadoop.conf.Configuration())
+
+  /** The served location of `(ref, key)`, where a writer that ignores
+    * `write.data.path` stages its files. */
+  private def tableRoot(prefix: Option[String], ref: String,
+      key: String): Path =
+    prefix.fold(exportRoot)(exportRoot.resolve)
+      .resolve(ref).resolve(key).toAbsolutePath.normalize
+
+  private def dataRel(repo: GraftRepo, loc: String): String =
+    repo.dataIO.relOf(loc).getOrElse(throw new IllegalStateException(
+      s"base data file outside the repo data plane: $loc"))
+
+  /** The posted snapshot's data and delete files. An unreadable or
+    * garbage manifest list is the CLIENT's error — the posted location
+    * either does not exist or is not avro — never a
+    * commit-state-unknown 500. */
+  private def postedFiles(snap: JsonNode, formatVersion: Int)
+      : (Seq[IcebergImport.DataFile], Seq[IcebergImport.DeleteFile]) =
+    try IcebergImport.filesOfManifestList(text(snap, "manifest-list"),
+      formatVersion)
+    catch {
+      case e @ (_: java.io.IOException |
+                _: org.apache.avro.AvroRuntimeException) =>
+        throw new IllegalArgumentException(
+          s"posted manifest-list is unreadable: ${e.getMessage}")
     }
 
-    // ---- engine ROLLBACK (Spark's rollback_to_snapshot / Iceberg's
-    // ManageSnapshots.setCurrentSnapshot): a bare set-snapshot-ref to a
-    // PRIOR served snapshot, no add-snapshot. The exported snapshot id
-    // is the stable 64-bit name-UUID of the graft snapshot sha
-    // (IcebergExport), so it inverts over the same first-parent history
-    // walk the export used — and the rollback is a ZERO-COPY table
-    // pointer swap (content-addressed snapshots never moved).
-    if (snapNode.isEmpty && newSchemaNode.isEmpty &&
-        setRefTarget.exists(id => !servedSnapId.contains(id))) {
-      if (setProps.nonEmpty || removeProps.nonEmpty)
-        throw new UnsupportedOperationException(
-          "rollback (set-snapshot-ref to a prior snapshot) is its own " +
-            "commit over REST — post property updates separately")
-      val target = setRefTarget.get
-      def sidOf(gid: String): Long = IcebergExport.icebergSnapshotId(gid)
-      // the sid→gid inversion is MEMOIZED per served table keyed by
-      // the head commit, and the walk is LAZY: it stops at the
-      // requested sid and records the frontier (next unwalked commit),
-      // so a rollback loads O(distance to target) commits — never the
-      // whole first-parent history of a deep table (one commit load =
-      // one RPC on a remote GraftIO backend). A repeat rollback to an
-      // indexed id loads ZERO commits; a deeper target resumes from
-      // the frontier; new commits above the old head splice onto the
-      // cached index (the NEWER walk wins on a sid collision, matching
-      // head-first order).
-      val targetGid: Option[String] = {
-        val headC = repo.resolve(ref)
-        val cacheKey = s"${repo.root}\u0000$ref\u0000$key"
-        val cached = Option(rollbackSidIndex.get(cacheKey))
-        var idx = Map.empty[Long, String]
-        var frontierId: Option[String] = Some(headC.id)
-        // headC is already loaded — spare the first walk step its RPC
-        var preloaded: Option[graft.versioned.Commit] = Some(headC)
-        // a stale-head cache still splices when the walk reaches its head
-        var splice = cached
-        cached match {
-          case Some((hid, i, f)) if hid == headC.id =>
-            idx = i; frontierId = f; splice = None
-          case _ => ()
+  /** The fold of a member lowered by [[memberSnapshot]]. */
+  private def memberFold(repo: GraftRepo, c: Change, sv: Served,
+      entries: Seq[FileEntry],
+      eqFilter: Option[org.apache.spark.sql.sources.Filter],
+      dropRels: Seq[String], schemaChanges: Seq[TableChange])
+      : (Commit, Map[String, String]) => Map[String, String] = {
+    (base, acc) =>
+      sv.pin(base)
+      acc + (c.key -> memberSnapshot(repo, c.key,
+        repo.snapshot(base.tables(c.key)), entries, eqFilter, dropRels,
+        schemaChanges, c.setProps, c.removeProps).id)
+  }
+
+  /** The staged-create publish (`stage-create: true`, then a commit
+    * asserting create): schema, partition spec, properties and the first
+    * snapshot land as ONE graft commit, so an external engine's CTAS is
+    * atomic. Concurrent creators race on the key inside the fold and
+    * exactly one wins; an abandoned stage never touched the branch. */
+  private def stageCreate(repo: GraftRepo, prefix: Option[String],
+      c: Change): Staged = {
+    val sNode = c.schema.getOrElse(throw new IllegalArgumentException(
+      "staged create commit carries no add-schema"))
+    val schema = IcebergImport.structOf(sNode)
+    val spec = c.spec.map(partitionSpecOf(_, idToNameOf(sNode))).getOrElse(Nil)
+    TableOps.validateSpec(schema, spec)
+    // the first snapshot's files (a zero-row CTAS may post none); the
+    // engine wrote its manifest list against the staged metadata this
+    // server handed out, which serves at `formatVersion`
+    val entries = c.snapshot.map { snap =>
+      val (data, deletes) = postedFiles(snap, formatVersion)
+      if (deletes.nonEmpty) throw new UnsupportedOperationException(
+        "a staged create's first snapshot carries delete files")
+      ingestEntries(repo, c.ref, c.key, tableRoot(prefix, c.ref, c.key),
+        data, schema, Map.empty, spec, hadoopConf)
+    }.getOrElse(Nil)
+    val props = c.setProps -- c.removeProps ++
+      (if (entries.isEmpty) Map.empty else Map(Tombstones.SeqProp -> "1"))
+    Staged(c.key, s"rest: create table ${c.key} (staged, " +
+      s"${entries.size} files, ${entries.map(_.rows).sum} rows)",
+      writes = true, (base, acc) => {
+        if (base.tables.contains(c.key) || acc.contains(c.key))
+          throw new RestConflict("AlreadyExistsException",
+            s"table already exists: ${c.key} @ ${c.ref}")
+        val snap = repo.writeSnapshot(c.key, schema.json,
+          entries.map(_.copy(seq = Some(1L))),
+          if (spec.isEmpty) None else Some(spec), None,
+          if (props.isEmpty) None else Some(props))
+        acc + (c.key -> snap.id)
+      }, namespace = Some(c.dirs.mkString("/")))
+  }
+
+  /** Partition-spec evolution (ALTER TABLE ADD PARTITION FIELD over
+    * REST), lowered onto graft's forward-only spec swap
+    * ([[TableOps.respec]]: old files keep their recorded values,
+    * name-reuse rebinds to fresh names). */
+  private def stageSpec(repo: GraftRepo, c: Change, sv: Served): Staged = {
+    val spec = partitionSpecOf(c.spec.get, idToNameOf(currentSchemaOf(sv)))
+    Staged(c.key, s"set partition spec on ${c.key}", writes = true,
+      (base, acc) => {
+        sv.pin(base)
+        acc + (c.key -> TableOps.respec(repo, c.key,
+          repo.snapshot(base.tables(c.key)), spec, c.setProps,
+          c.removeProps).id)
+      })
+  }
+
+  /** TAG ref writes (set-snapshot-ref type=tag / remove-snapshot-ref):
+    * Spark's ALTER TABLE ... CREATE/DROP TAG lowers onto graft REPO
+    * tags. The created tag pins the newest commit where this table
+    * served the named snapshot (for "tag the current state", the head
+    * commit); the read side serves it back in every exported table's
+    * refs map (an Iceberg tag means "the table's state at the tagged
+    * commit", so the repo-level scope is a superset, never a lie —
+    * SURVEY §6). Tag state is baked into the serve memo's
+    * graft.source-tags signature, so the next serve re-exports with the
+    * fresh refs map. */
+  private def stageTag(repo: GraftRepo, c: Change): Staged = {
+    val created = c.tagCreate.map { case (name, sid) =>
+      // newest-first walk over ALL parents (bounded breadth-first),
+      // O(distance to target) commit loads — tag creation is
+      // control-plane rare, no memo needed. All parents, not just the
+      // first: a snapshot reachable only through a merge's SECOND
+      // parent is still one an engine observed via the served
+      // metadata, so it must be taggable (the first-parent-only walk
+      // 400'd it as "not a version"). A path stops at the table's
+      // creation commit (table absent → parents not walked).
+      val head = repo.resolve(c.ref)
+      val seen = scala.collection.mutable.HashSet[String](head.id)
+      val queue = scala.collection.mutable.Queue[Commit](head)
+      var found: Option[String] = None
+      var hops = 0
+      while (found.isEmpty && queue.nonEmpty && hops < 100000) {
+        val cm = queue.dequeue()
+        hops += 1
+        cm.tables.get(c.key) match {
+          case Some(gid) if IcebergExport.icebergSnapshotId(gid) == sid =>
+            found = Some(cm.id)
+          case Some(_) =>
+            cm.parents.filter(seen.add).foreach(p => queue.enqueue(repo.commit(p)))
+          case None => ()
         }
-        var hops = 0
-        while (!idx.contains(target) && frontierId.isDefined &&
-          hops < 100000) {
-          splice.filter(_._1 == frontierId.get) match {
-            case Some((_, old, oldF)) =>
-              idx = old ++ idx
-              frontierId = oldF
-              splice = None
-            case None =>
-              val c = preloaded.filter(_.id == frontierId.get)
-                .getOrElse(repo.commit(frontierId.get))
-              preloaded = None
-              if (!c.tables.contains(key)) frontierId = None
-              else {
-                val gid = c.tables(key)
-                val sid = sidOf(gid)
-                if (!idx.contains(sid)) idx += (sid -> gid)
-                frontierId = c.parents.headOption
-                hops += 1
-              }
-          }
-        }
-        rollbackSidIndex.put(cacheKey, (headC.id, idx, frontierId))
-        idx.get(target)
       }
-      val gid = targetGid.getOrElse(throw new IllegalArgumentException(
-        s"set-snapshot-ref names snapshot $target, which is not a " +
-          s"version of $key on $ref — nothing to roll back to"))
-      val targetSnap = repo.snapshot(gid)
-      // vacuum check: only files the HEAD no longer lists can have been
-      // GC'd (vacuum spares everything reachable from a branch head).
-      // Segmented tables diff content-addressed manifest refs — files
-      // in chunks the head still carries are alive for free, and only
-      // the differing chunks load, so the probe is O(changed chunks)
-      // metadata + O(their files) stats, never an O(table)
-      // materialization or stat storm on a million-file table. (A file
-      // in a differing chunk may still be alive under a shifted chunk
-      // boundary — its stat is then merely redundant, never wrong.)
-      // The probe runs INSIDE each commit closure against the retry
-      // base's head (not the pre-commit head), so a ref that moved
-      // between probe and publish is re-checked against the base the
-      // CAS actually publishes on. RESIDUAL RACE, documented: vacuum
-      // never advances the branch ref, so a sweep that starts after
-      // the in-closure probe and deletes target-only files before the
-      // CAS lands is invisible to commitRetry — the probe shrinks the
-      // window from "serve → publish" to "stat → publish" but cannot
-      // close it without a repo-level GC/commit mutual exclusion the
-      // format does not have (Iceberg proper has the same
-      // expire-vs-rollback race). Operationally covered by running
-      // vacuum with a generous age threshold and not concurrently
-      // with restores, which the age guard's default encodes.
-      def requireRestorable(hd: graft.versioned.Snapshot): Unit = {
-        val missing: Seq[FileEntry] =
-          if (hd.manifestRefs.nonEmpty && targetSnap.manifestRefs.nonEmpty) {
-            val headChunks = hd.manifestRefs.map(_.path).toSet
-            targetSnap.manifestRefs.filterNot(r => headChunks(r.path))
-              .flatMap(r => Manifests.load(repo.root, repo.io, r))
-              .filterNot(f => repo.dataIO.isFile(f.path))
-          } else if (targetSnap.manifestRefs.isEmpty) {
-            // inline target: bounded by the inline threshold
-            targetSnap.files.filterNot(f => repo.dataIO.isFile(f.path))
-          } else {
-            // target segmented, head inline (table shrank): the inline
-            // head is small — membership-filter against it, stat the rest
-            val headLive = hd.files.iterator.map(_.path).toSet
-            targetSnap.files.iterator
-              .filterNot(f => headLive(f.path))
-              .filterNot(f => repo.dataIO.isFile(f.path)).toSeq
-          }
-        if (missing.nonEmpty) throw new IllegalArgumentException(
-          s"rollback target of $key references ${missing.size} vacuumed " +
-            s"file(s) (e.g. ${missing.head.path}) — not restorable")
+      (name, sid, found.getOrElse(throw new IllegalArgumentException(
+        s"set-snapshot-ref tag $name names snapshot $sid, which is " +
+          s"not a version of ${c.key} on ${c.ref}")))
+    }
+    // a tag member is its commit's only member, so staging publishes
+    created.foreach { case (name, sid, cid) =>
+      if (repo.tagExists(name)) {
+        // IDEMPOTENT when the existing tag serves the SAME snapshot
+        // for this table (not same-commit: an unrelated commit can
+        // move head so a retried create resolves a different commit
+        // with the identical table state); a genuinely different
+        // target refuses — graft tags are immutable while they live
+        val sameState = scala.util.Try(repo.resolve(name)).toOption
+          .flatMap(_.tables.get(c.key))
+          .exists(g => IcebergExport.icebergSnapshotId(g) == sid)
+        if (!sameState)
+          throw new RestConflict("AlreadyExistsException",
+            s"tag already exists: $name")
+      } else repo.createTag(name, cid)
+    }
+    c.tagRemove.foreach { name =>
+      if (!repo.tagExists(name))
+        throw new NoSuchElementException(s"no such tag: $name")
+      repo.dropTag(name)
+    }
+    Staged(c.key, "", writes = false, (_, acc) => acc)
+  }
+
+  /** Engine ROLLBACK (Spark's rollback_to_snapshot / Iceberg's
+    * ManageSnapshots.setCurrentSnapshot): a bare set-snapshot-ref to a
+    * PRIOR served snapshot. The exported snapshot id is the stable
+    * 64-bit name-UUID of the graft snapshot sha (IcebergExport), so it
+    * inverts over the same first-parent history walk the export used —
+    * and the rollback is a ZERO-COPY table pointer swap
+    * (content-addressed snapshots never moved). */
+  private def stageRollback(repo: GraftRepo, c: Change, sv: Served,
+      target: Long): Staged = {
+    val (ref, key) = (c.ref, c.key)
+    def sidOf(gid: String): Long = IcebergExport.icebergSnapshotId(gid)
+    // the sid→gid inversion is MEMOIZED per served table keyed by
+    // the head commit, and the walk is LAZY: it stops at the
+    // requested sid and records the frontier (next unwalked commit),
+    // so a rollback loads O(distance to target) commits — never the
+    // whole first-parent history of a deep table (one commit load =
+    // one RPC on a remote GraftIO backend). A repeat rollback to an
+    // indexed id loads ZERO commits; a deeper target resumes from
+    // the frontier; new commits above the old head splice onto the
+    // cached index (the NEWER walk wins on a sid collision, matching
+    // head-first order).
+    val targetGid: Option[String] = {
+      val headC = repo.resolve(ref)
+      val cacheKey = s"${repo.root}\u0000$ref\u0000$key"
+      val cached = Option(rollbackSidIndex.get(cacheKey))
+      var idx = Map.empty[Long, String]
+      var frontierId: Option[String] = Some(headC.id)
+      // headC is already loaded — spare the first walk step its RPC
+      var preloaded: Option[Commit] = Some(headC)
+      // a stale-head cache still splices when the walk reaches its head
+      var splice = cached
+      cached match {
+        case Some((hid, i, f)) if hid == headC.id =>
+          idx = i; frontierId = f; splice = None
+        case _ => ()
       }
-      // Iceberg's rollback moves only the ref — schema, spec, mapping
-      // and properties stay CURRENT — but a graft snapshot bundles all
-      // of them, so a bare pointer swap across ANY metadata evolution
-      // would silently revert state Iceberg keeps current. Served
-      // history never crosses an evolution (export eligibility checks
-      // all of these), so every id the engine can SEE takes the
-      // zero-copy swap; a remembered id from before a metadata change
-      // lowers onto a FILE-SET REVERT instead (r15): one commit whose
-      // snapshot carries the TARGET's live files and MoR tombstone
-      // state under the HEAD's schema/spec/mapping/user properties —
-      // exactly the Iceberg observable state (rows revert, metadata
-      // does not). Old files read under the current schema the same
-      // way any post-evolution read does: physical column names are
-      // write-stable (renames rebind only the logical name) and graft
-      // evolution is metadata-only, so every file the target listed is
-      // still readable and prunable under the head metadata. MoR
-      // tombstone state (graft.mor.*) comes from the TARGET: delete
-      // state legitimately differs per snapshot and reverting it IS
-      // the rollback's point. NOTE the one protocol-visible
-      // divergence: the reverted state re-exports under a FRESH
-      // snapshot id (a new graft snapshot), where Iceberg proper would
-      // re-serve the remembered id — a client that re-posts the same
-      // rollback hits the already-reverted guard below and gets a
-      // validated no-op.
-      def userProps(sn: graft.versioned.Snapshot): Map[String, String] =
-        sn.properties.filterNot(_._1.startsWith("graft.mor."))
-      def morProps(sn: graft.versioned.Snapshot): Map[String, String] =
-        sn.properties.filter(_._1.startsWith("graft.mor."))
-      val metadataMatches =
-        targetSnap.schemaJson == head.schemaJson &&
-        targetSnap.partitionFields == head.partitionFields &&
-        targetSnap.nameMapping == head.nameMapping &&
-        userProps(targetSnap) == userProps(head)
-      // file-set equality: segmented snapshots compare O(chunks) of
-      // content-addressed manifest refs (identical lists chunk
-      // identically — content-defined cuts), never materializing a
-      // million-file list on the driver; inline snapshots compare the
-      // lists directly
-      val sameFiles =
-        if (head.manifestRefs.nonEmpty && targetSnap.manifestRefs.nonEmpty)
-          head.manifestRefs.map(_.path) == targetSnap.manifestRefs.map(_.path)
-        else if (head.manifestRefs.isEmpty && targetSnap.manifestRefs.isEmpty)
-          head.files.map(f => (f.path, f.seqNo)).toSet ==
-            targetSnap.files.map(f => (f.path, f.seqNo)).toSet
-        else false // one segmented, one inline — sizes differ by design
-      val alreadyReverted =
-        sameFiles && morProps(head) == morProps(targetSnap)
-      if (metadataMatches)
-        repo.commitRetry(ref, s"rest: rollback $key to snapshot $target") {
-          base =>
-            pin(base)
-            requireRestorable(repo.snapshot(base.tables(key)))
-            (base.tables + (key -> gid), base.namespaces)
+      var hops = 0
+      while (!idx.contains(target) && frontierId.isDefined &&
+        hops < 100000) {
+        splice.filter(_._1 == frontierId.get) match {
+          case Some((_, old, oldF)) =>
+            idx = old ++ idx
+            frontierId = oldF
+            splice = None
+          case None =>
+            val cm = preloaded.filter(_.id == frontierId.get)
+              .getOrElse(repo.commit(frontierId.get))
+            preloaded = None
+            if (!cm.tables.contains(key)) frontierId = None
+            else {
+              val gid = cm.tables(key)
+              val sid = sidOf(gid)
+              if (!idx.contains(sid)) idx += (sid -> gid)
+              frontierId = cm.parents.headOption
+              hops += 1
+            }
         }
-      else if (!alreadyReverted)
-        repo.commitRetry(ref, s"rest: rollback $key to snapshot $target " +
-          "(file-set revert across a metadata change)") { base =>
-          pin(base)
+      }
+      rollbackSidIndex.put(cacheKey, (headC.id, idx, frontierId))
+      idx.get(target)
+    }
+    val gid = targetGid.getOrElse(throw new IllegalArgumentException(
+      s"set-snapshot-ref names snapshot $target, which is not a " +
+        s"version of $key on $ref — nothing to roll back to"))
+    val targetSnap = repo.snapshot(gid)
+    val head = repo.snapshot(sv.graftSnap)
+    // vacuum check: only files the HEAD no longer lists can have been
+    // GC'd (vacuum spares everything reachable from a branch head).
+    // Segmented tables diff content-addressed manifest refs — files
+    // in chunks the head still carries are alive for free, and only
+    // the differing chunks load, so the probe is O(changed chunks)
+    // metadata + O(their files) stats, never an O(table)
+    // materialization or stat storm on a million-file table. (A file
+    // in a differing chunk may still be alive under a shifted chunk
+    // boundary — its stat is then merely redundant, never wrong.)
+    // The probe runs INSIDE the commit fold against the retry
+    // base's head (not the pre-commit head), so a ref that moved
+    // between probe and publish is re-checked against the base the
+    // CAS actually publishes on. RESIDUAL RACE, documented: vacuum
+    // never advances the branch ref, so a sweep that starts after
+    // the in-closure probe and deletes target-only files before the
+    // CAS lands is invisible to commitRetry — the probe shrinks the
+    // window from "serve → publish" to "stat → publish" but cannot
+    // close it without a repo-level GC/commit mutual exclusion the
+    // format does not have (Iceberg proper has the same
+    // expire-vs-rollback race). Operationally covered by running
+    // vacuum with a generous age threshold and not concurrently
+    // with restores, which the age guard's default encodes.
+    def requireRestorable(hd: Snapshot): Unit = {
+      val missing: Seq[FileEntry] =
+        if (hd.manifestRefs.nonEmpty && targetSnap.manifestRefs.nonEmpty) {
+          val headChunks = hd.manifestRefs.map(_.path).toSet
+          targetSnap.manifestRefs.filterNot(r => headChunks(r.path))
+            .flatMap(r => Manifests.load(repo.root, repo.io, r))
+            .filterNot(f => repo.dataIO.isFile(f.path))
+        } else if (targetSnap.manifestRefs.isEmpty) {
+          // inline target: bounded by the inline threshold
+          targetSnap.files.filterNot(f => repo.dataIO.isFile(f.path))
+        } else {
+          // target segmented, head inline (table shrank): the inline
+          // head is small — membership-filter against it, stat the rest
+          val headLive = hd.files.iterator.map(_.path).toSet
+          targetSnap.files.iterator
+            .filterNot(f => headLive(f.path))
+            .filterNot(f => repo.dataIO.isFile(f.path)).toSeq
+        }
+      if (missing.nonEmpty) throw new IllegalArgumentException(
+        s"rollback target of $key references ${missing.size} vacuumed " +
+          s"file(s) (e.g. ${missing.head.path}) — not restorable")
+    }
+    // Iceberg's rollback moves only the ref — schema, spec, mapping
+    // and properties stay CURRENT — but a graft snapshot bundles all
+    // of them, so a bare pointer swap across ANY metadata evolution
+    // would silently revert state Iceberg keeps current. Served
+    // history never crosses an evolution (export eligibility checks
+    // all of these), so every id the engine can SEE takes the
+    // zero-copy swap; a remembered id from before a metadata change
+    // lowers onto a FILE-SET REVERT instead (r15): one commit whose
+    // snapshot carries the TARGET's live files and MoR tombstone
+    // state under the HEAD's schema/spec/mapping/user properties —
+    // exactly the Iceberg observable state (rows revert, metadata
+    // does not). Old files read under the current schema the same
+    // way any post-evolution read does: physical column names are
+    // write-stable (renames rebind only the logical name) and graft
+    // evolution is metadata-only, so every file the target listed is
+    // still readable and prunable under the head metadata. MoR
+    // tombstone state (graft.mor.*) comes from the TARGET: delete
+    // state legitimately differs per snapshot and reverting it IS
+    // the rollback's point. NOTE the one protocol-visible
+    // divergence: the reverted state re-exports under a FRESH
+    // snapshot id (a new graft snapshot), where Iceberg proper would
+    // re-serve the remembered id — a client that re-posts the same
+    // rollback hits the already-reverted guard below and gets a
+    // validated no-op.
+    def userProps(sn: Snapshot): Map[String, String] =
+      sn.properties.filterNot(_._1.startsWith("graft.mor."))
+    def morProps(sn: Snapshot): Map[String, String] =
+      sn.properties.filter(_._1.startsWith("graft.mor."))
+    val metadataMatches =
+      targetSnap.schemaJson == head.schemaJson &&
+      targetSnap.partitionFields == head.partitionFields &&
+      targetSnap.nameMapping == head.nameMapping &&
+      userProps(targetSnap) == userProps(head)
+    // file-set equality: segmented snapshots compare O(chunks) of
+    // content-addressed manifest refs (identical lists chunk
+    // identically — content-defined cuts), never materializing a
+    // million-file list on the driver; inline snapshots compare the
+    // lists directly
+    val sameFiles =
+      if (head.manifestRefs.nonEmpty && targetSnap.manifestRefs.nonEmpty)
+        head.manifestRefs.map(_.path) == targetSnap.manifestRefs.map(_.path)
+      else if (head.manifestRefs.isEmpty && targetSnap.manifestRefs.isEmpty)
+        head.files.map(f => (f.path, f.seqNo)).toSet ==
+          targetSnap.files.map(f => (f.path, f.seqNo)).toSet
+      else false // one segmented, one inline — sizes differ by design
+    if (metadataMatches)
+      Staged(key, s"rest: rollback $key to snapshot $target", writes = true,
+        (base, acc) => {
+          sv.pin(base)
+          requireRestorable(repo.snapshot(base.tables(key)))
+          acc + (key -> gid)
+        })
+    else if (sameFiles && morProps(head) == morProps(targetSnap))
+      Staged(key, "", writes = false, (_, acc) => acc) // already reverted
+    else
+      Staged(key, s"rest: rollback $key to snapshot $target " +
+        "(file-set revert across a metadata change)", writes = true,
+        (base, acc) => {
+          sv.pin(base)
           val prior = repo.snapshot(base.tables(key))
           requireRestorable(prior)
           val props = userProps(prior) ++ morProps(targetSnap)
           val ns2 = repo.writeSnapshot(key, prior.schemaJson,
             targetSnap.files, prior.partitionBy, prior.physicalNames,
             if (props.isEmpty) None else Some(props), prior.retired)
-          (base.tables + (key -> ns2.id), base.namespaces)
-        }
-      return loadResult(serve(repo, prefix, ref, key))
-    }
-    // a no-op set-snapshot-ref to the CURRENT snapshot with nothing
-    // else riding: validated no-op (engines post it after refresh)
-    if (snapNode.isEmpty && newSchemaNode.isEmpty &&
-        setProps.isEmpty && removeProps.isEmpty &&
-        setRefTarget.exists(id => servedSnapId.contains(id)))
-      return loadResult(serve(repo, prefix, ref, key))
+          acc + (key -> ns2.id)
+        })
+  }
 
-    // ---- metadata-only commit (ALTER TABLE over REST): no snapshot
-    if (snapNode.isEmpty) {
-      if (newSchemaNode.isEmpty && setProps.isEmpty && removeProps.isEmpty) {
-        // a PURE advisory commit (a bare WRITE ORDERED BY, an ANALYZE
-        // TABLE statistics pointer) is a validated no-op; anything
-        // else empty is a client bug
-        if (sawAdvisory)
-          return loadResult(serve(repo, prefix, ref, key))
-        throw new IllegalArgumentException("commit carries no updates")
-      }
-      repo.commitRetry(ref, s"rest: update schema $key") { base =>
-        pin(base)
-        val prior = repo.snapshot(base.tables(key))
-        val ev = SchemaEvolution.evolve(prior, schemaChanges)
-        val props = (ev.props -- removeProps) ++ setProps
-        val ns2 = repo.writeSnapshot(key, ev.schema.json, prior.files,
-          if (ev.spec.isEmpty) None else Some(ev.spec),
-          if (ev.mapping.isEmpty) None else Some(ev.mapping),
-          if (props.isEmpty) None else Some(props),
-          if (ev.retired.isEmpty) None else Some(ev.retired.toSeq.sorted))
-        (base.tables + (key -> ns2.id), base.namespaces)
-      }
-      return loadResult(serve(repo, prefix, ref, key))
-    }
-
-    val snap = snapNode.get
-    // a set-snapshot-ref riding an add-snapshot must name the ADDED
-    // snapshot (or the served current) — a mismatched target is a
-    // client bug that would otherwise land the posted snapshot while
-    // the engine believes the ref moved somewhere else
-    setRefTarget.foreach { tgt =>
-      val addedId = Option(snap.get("snapshot-id")).map(_.asLong())
-      if (!addedId.contains(tgt) && !servedSnapId.contains(tgt))
-        throw new IllegalArgumentException(
-          s"set-snapshot-ref names snapshot $tgt, but this commit adds " +
-            s"${addedId.getOrElse("<none>")} — post a rollback (bare " +
-            "set-snapshot-ref) or a consistent commit")
-    }
-    val op = Option(snap.get("summary")).flatMap(s =>
-      Option(s.get("operation"))).map(_.asText()).getOrElse("append")
-    if (!Set("append", "overwrite", "delete", "replace")(op))
-      throw new UnsupportedOperationException(
-        s"unsupported commit operation over REST: '$op' (accepted: " +
-          "append, overwrite, delete, replace)")
-    // a snapshot written under the schema this same commit adds is
-    // fine; any OTHER unknown schema-id is a client bug
-    Option(snap.get("schema-id")).map(_.asInt()).foreach { sid =>
-      val addedId = newSchemaNode.flatMap(s =>
-        Option(s.get("schema-id")).map(_.asInt()))
-      if (sid != servedSchemaId && !addedId.contains(sid))
-        throw new IllegalArgumentException(
-          s"snapshot schema-id $sid matches neither the served " +
-            s"current-schema-id $servedSchemaId nor a schema added by " +
-            "this commit")
-    }
-
-    // the EVOLVED table shape this commit's files are described under
-    // (identity when no schema change was posted)
-    val ev = SchemaEvolution.evolve(head, schemaChanges)
-    if (schemaChanges.nonEmpty && op != "append")
-      throw new UnsupportedOperationException(
-        "schema changes combine only with append commits over REST " +
-          "(post the schema update on its own, then the rewrite)")
-
-    // ---- the posted table state must be (base − dropped) ∪ new; an
-    // `append` may not drop anything, an `overwrite`/`delete` expresses
-    // the engine's CoW rewrite by dropping the files it replaced.
-    // EQUALITY delete files lower onto graft's predicate tombstones —
-    // the exact inverse of the exporter's tombstone → equality-delete
-    // mapping (SURVEY §2.1b.3): the posted value rows become one
-    // tombstone at the table's next sequence, data files added in the
-    // SAME commit register at that sequence and are exempt (Iceberg's
-    // strictly-lower rule, graft's strict `>` applicability — the
-    // Flink-upsert shape). POSITIONAL delete files and v3 DVs — the
-    // default Spark MoR DELETE/UPDATE shape — lower onto a server-side
-    // CoW rewrite of exactly the files they reference (see below):
-    // reference parity with LakeFSTableOperations.commit (java:115-147),
-    // which accepts any metadata swap.
-    val v = served.get("format-version").asInt()
-    // an unreadable/garbage manifest list is the CLIENT's error — the
-    // posted location either does not exist or is not avro — never a
-    // commit-state-unknown 500
+  /** Stage an add-snapshot member. The posted table state must be
+    * (base − dropped) ∪ new: an `append` may not drop anything; an
+    * `overwrite`/`delete` is the engine's copy-on-write rewrite (dropped
+    * base files leave the live set, added files register at the table's
+    * next sequence); a `replace` is the engine's own compaction.
+    * EQUALITY delete files lower onto graft's predicate tombstones — the
+    * exact inverse of the exporter's tombstone → equality-delete mapping
+    * (SURVEY §2.1b.3): the posted value rows become one tombstone at the
+    * table's next sequence, and data files added in the SAME commit
+    * register at that sequence and are exempt (Iceberg's strictly-lower
+    * rule, graft's strict `>` applicability — the Flink-upsert shape).
+    * POSITIONAL delete files and v3 DVs — the default Spark MoR
+    * DELETE/UPDATE shape — lower onto a server-side CoW rewrite of
+    * exactly the files they reference ([[materializePosDeletes]]).
+    * Reference parity: LakeFSTableOperations.commit (java:115-147)
+    * accepts any metadata swap. Everything expensive — footer reads,
+    * copy-in, the positional rewrite's Spark jobs — runs here, before
+    * the commit race, so a commit retry never re-runs it.
+    */
+  private def stageData(repo: GraftRepo, prefix: Option[String], c: Change,
+      sv: Served, op: String, schemaChanges: Seq[TableChange]): Staged = {
+    val key = c.key
     val (postedData, postedDeletes) =
-      try IcebergImport.filesOfManifestList(text(snap, "manifest-list"), v)
-      catch {
-        case e @ (_: java.io.IOException |
-                  _: org.apache.avro.AvroRuntimeException) =>
-          throw new IllegalArgumentException(
-            s"posted manifest-list is unreadable: ${e.getMessage}")
-      }
-    val basePlan = IcebergImport.plan(metaPath.toString, None)
+      postedFiles(c.snapshot.get, sv.meta.get("format-version").asInt())
+    val basePlan = IcebergImport.plan(sv.path.toString, None)
     // delete files the posted snapshot RELISTS from the served export
     // are the table's OWN tombstones coming back (a real engine reuses
     // existing delete manifests on every commit — an append on a
@@ -1587,19 +1701,12 @@ final class IcebergRestServer private (single: Option[GraftRepo],
       throw new IllegalArgumentException(
         "append commit carries positional delete files (post " +
           "operation=overwrite or delete)")
-    if (posDeletes.nonEmpty && schemaChanges.nonEmpty)
-      throw new UnsupportedOperationException(
-        "schema changes and positional deletes cannot share one commit")
     if (eqDeletes.nonEmpty && op == "append")
       throw new IllegalArgumentException(
         "append commit carries equality delete files (post " +
           "operation=overwrite or delete)")
-    if (eqDeletes.nonEmpty && schemaChanges.nonEmpty)
-      throw new UnsupportedOperationException(
-        "schema changes and equality deletes cannot share one commit")
     val basePaths = basePlan.dataPaths.toSet
-    val postedPaths = postedData.map(_.path)
-    val dropped = basePaths -- postedPaths.toSet
+    val dropped = basePaths -- postedData.map(_.path)
     if (op == "append" && dropped.nonEmpty)
       throw new UnsupportedOperationException(
         s"posted snapshot drops ${dropped.size} base data file(s) — not " +
@@ -1613,67 +1720,105 @@ final class IcebergRestServer private (single: Option[GraftRepo],
         "one commit mixes dropped data files (CoW) with positional " +
           "delete files (MoR) — post them as two commits")
     val addedFiles = postedData.filterNot(d => basePaths(d.path))
+    val hconf = hadoopConf
+    val destRoot = tableRoot(prefix, c.ref, key)
+    val head = repo.snapshot(sv.graftSnap)
+    // the EVOLVED table shape this commit's files are described under
+    // (identity when no schema change was posted)
+    val ev = SchemaEvolution.evolve(head, schemaChanges)
+    if (op == "replace")
+      return stageReplace(repo, c, sv, head, ev, basePlan, postedDeletes,
+        newDeletes, dropped, addedFiles, destRoot, hconf)
+    if (posDeletes.nonEmpty) {
+      val pm = materializePosDeletes(repo, c.ref, key, destRoot, head,
+        basePlan, addedFiles, posDeletes, eqDeletes, hconf)
+      return Staged(key, s"rest: $op $key (positional deletes " +
+        s"materialized: ${pm.dirtyBase} base file(s) rewritten, " +
+        s"${pm.dirtyAdds} add(s) folded, +${pm.cleanEntries.size} new" +
+        (if (pm.eqFilter.isDefined) ", equality tombstone" else "") + ")",
+        writes = true, memberFold(repo, c, sv,
+          pm.rewritten ++ pm.cleanEntries, pm.eqFilter, pm.dropBaseRels,
+          Nil))
+    }
+    // equality deletes → ONE tombstone predicate (Or across files/rows),
+    // refused (NULL-valued, oversized) before any file registers
+    val eqFilter =
+      if (eqDeletes.isEmpty) None
+      else Some(equalityTombstoneFilter(repo, destRoot, eqDeletes,
+        basePlan.fieldIdToName, hconf))
+    val entries = ingestEntries(repo, c.ref, key, destRoot, addedFiles,
+      ev.schema, ev.mapping, ev.spec, hconf)
+    val dropRels = dropped.toSeq.sorted.map(dataRel(repo, _))
+    val rows = entries.map(_.rows).sum
+    Staged(key,
+      if (eqFilter.isDefined)
+        s"rest: $op $key (merge-on-read, +${entries.size} files)"
+      else if (schemaChanges.nonEmpty)
+        s"rest: evolve+append $key (+${entries.size} files)"
+      else if (op == "append")
+        s"rest: append $key (${entries.size} files, $rows rows)"
+      else s"rest: $op $key (+${entries.size}/-${dropRels.size} files, " +
+        s"+$rows rows)",
+      writes = true,
+      memberFold(repo, c, sv, entries, eqFilter, dropRels, schemaChanges))
+  }
 
-    val hconf = spark.map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    val destRoot = prefix.fold(exportRoot)(exportRoot.resolve)
-      .resolve(ref).resolve(key).toAbsolutePath.normalize
-
-    // ---- operation=replace: an external engine's OWN maintenance —
-    // Spark's rewrite_data_files, Flink's compaction — posting a
-    // row-preserving rewrite: dropped base files re-expressed as new
-    // files with identical live content. Reference parity:
-    // LakeFSTableOperations.java:115–147 accepts any metadata swap.
-    // Graft validates the shape the way TableOps.compact validates its
-    // own rewrite — dropped files must still be live at the commit base
-    // and the tombstone set must not have moved since the served base
-    // (a concurrent MoR delete would be silently materialized away) —
-    // and lands it as a structural compaction commit
-    // (Commit.CompactMarker), so the Iceberg export classifies it
-    // `replace` and changesBetween nets it to zero.
-    if (op == "replace") {
-      if (newDeletes.nonEmpty)
-        throw new IllegalArgumentException(
-          s"replace (compaction) commit posts ${newDeletes.size} new " +
-            "delete file(s) — a rewrite materializes deletes, it does " +
-            "not add them (post MoR deletes as operation=delete)")
-      // a served delete file this replace RETIRES must no longer apply
-      // to any surviving base file, or the rows it masked would
-      // resurrect in the engine's view of the table
-      val postedDelNorm = postedDeletes
-        .map(dd => IcebergImport.normStr(dd.path)).toSet
-      val retiredDels = basePlan.deleteFiles.filterNot(dd =>
-        postedDelNorm(IcebergImport.normStr(dd.path)))
-      val survivingBase = basePlan.dataFiles.filterNot(f => dropped(f.path))
-      retiredDels.foreach { dd =>
-        val mayApply = dd.dv match {
-          case Some(r) => survivingBase.exists(f =>
-            IcebergImport.normStr(f.path) ==
-              IcebergImport.normStr(r.referencedFile))
-          case None if dd.content == 2 => survivingBase.exists(_.seq < dd.seq)
-          // file-based positional: which files it references is not
-          // knowable without reading it — conservative refusal
-          case None => survivingBase.exists(_.seq <= dd.seq)
-        }
-        if (mayApply) throw new IllegalArgumentException(
-          s"replace commit retires delete file ${dd.path} that may " +
-            "still apply to surviving base file(s) — the rows it masks " +
-            "would resurrect; rewrite those files too or relist it")
+  /** operation=replace: an external engine's OWN maintenance — Spark's
+    * rewrite_data_files, Flink's compaction — posting a row-preserving
+    * rewrite: dropped base files re-expressed as new files with
+    * identical live content. Graft validates the shape the way
+    * TableOps.compact validates its own rewrite — dropped files must
+    * still be live at the commit base and the tombstone set must not
+    * have moved since the served base (a concurrent MoR delete would be
+    * silently materialized away) — and lands it as a structural
+    * compaction commit (Commit.CompactMarker), so the Iceberg export
+    * classifies it `replace` and changesBetween nets it to zero.
+    */
+  private def stageReplace(repo: GraftRepo, c: Change, sv: Served,
+      head: Snapshot, ev: EvolvedTable, basePlan: IcebergImport.Plan,
+      postedDeletes: Seq[IcebergImport.DeleteFile],
+      newDeletes: Seq[IcebergImport.DeleteFile], dropped: Set[String],
+      addedFiles: Seq[IcebergImport.DataFile], destRoot: Path,
+      hconf: org.apache.hadoop.conf.Configuration): Staged = {
+    val key = c.key
+    if (newDeletes.nonEmpty)
+      throw new IllegalArgumentException(
+        s"replace (compaction) commit posts ${newDeletes.size} new " +
+          "delete file(s) — a rewrite materializes deletes, it does " +
+          "not add them (post MoR deletes as operation=delete)")
+    // a served delete file this replace RETIRES must no longer apply
+    // to any surviving base file, or the rows it masked would
+    // resurrect in the engine's view of the table
+    val postedDelNorm = postedDeletes
+      .map(dd => IcebergImport.normStr(dd.path)).toSet
+    val retiredDels = basePlan.deleteFiles.filterNot(dd =>
+      postedDelNorm(IcebergImport.normStr(dd.path)))
+    val survivingBase = basePlan.dataFiles.filterNot(f => dropped(f.path))
+    retiredDels.foreach { dd =>
+      val mayApply = dd.dv match {
+        case Some(r) => survivingBase.exists(f =>
+          IcebergImport.normStr(f.path) ==
+            IcebergImport.normStr(r.referencedFile))
+        case None if dd.content == 2 => survivingBase.exists(_.seq < dd.seq)
+        // file-based positional: which files it references is not
+        // knowable without reading it — conservative refusal
+        case None => survivingBase.exists(_.seq <= dd.seq)
       }
-      val entries = ingestEntries(repo, ref, key, destRoot, addedFiles,
-        ev.schema, ev.mapping, ev.spec, hconf)
-      val dropRels = basePlan.dataFiles.filter(f => dropped(f.path)).map { f =>
-        repo.dataIO.relOf(f.path).getOrElse(
-          throw new IllegalStateException(
-            s"base data file outside the repo data plane: ${f.path}"))
-      }
-      repo.commitRetry(ref, s"rest: replace $key (engine compaction: " +
-        s"-${dropRels.size} +${entries.size} files)",
-        marker = Some(Commit.CompactMarker)) { base =>
-        pin(base)
+      if (mayApply) throw new IllegalArgumentException(
+        s"replace commit retires delete file ${dd.path} that may " +
+          "still apply to surviving base file(s) — the rows it masks " +
+          "would resurrect; rewrite those files too or relist it")
+    }
+    val entries = ingestEntries(repo, c.ref, key, destRoot, addedFiles,
+      ev.schema, ev.mapping, ev.spec, hconf)
+    val dropSet = basePlan.dataFiles.filter(f => dropped(f.path))
+      .map(f => dataRel(repo, f.path)).toSet
+    Staged(key, s"rest: replace $key (engine compaction: " +
+      s"-${dropSet.size} +${entries.size} files)", writes = true,
+      (base, acc) => {
+        sv.pin(base)
         val prior = repo.snapshot(base.tables(key))
-        val live = prior.files.iterator.map(_.path).toSet
-        val missing = dropRels.toSet -- live
+        val missing = dropSet -- prior.files.iterator.map(_.path)
         if (missing.nonEmpty) throw new MergeConflictException(
           s"replace of $key drops ${missing.size} file(s) not live at " +
             s"the commit base (e.g. ${missing.head}) — refresh and retry")
@@ -1687,10 +1832,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
         // CompactMarker makes changesBetween net this commit to zero,
         // so a lying rewrite would otherwise hide inserts (or silent
         // row loss) from every CDC consumer.
-        val droppedEntries = {
-          val ds = dropRels.toSet
-          prior.files.filter(f => ds(f.path))
-        }
+        val droppedEntries = prior.files.filter(f => dropSet(f.path))
         val droppedRows = droppedEntries.map(_.rows).sum
         val addedRows = entries.map(_.rows).sum
         if (addedRows > droppedRows) throw new IllegalArgumentException(
@@ -1708,128 +1850,24 @@ final class IcebergRestServer private (single: Option[GraftRepo],
             s"replace of $key posts $addedRows rows where the dropped " +
               s"files held $droppedRows and no delete masked them — a " +
               "row-preserving rewrite must keep the count exact")
-        val props0 = (prior.properties -- removeProps) ++ setProps
+        val props0 = (prior.properties -- c.removeProps) ++ c.setProps
         val next = Tombstones.lastSeq(props0) + 1
-        val stamped = entries.map(_.copy(seq = Some(next)))
-        val dropSet = dropRels.toSet
-        val kept = prior.files.filterNot(f => dropSet(f.path))
         val snap2 = repo.writeSnapshot(key, prior.schemaJson,
-          kept ++ stamped, prior.partitionBy, prior.physicalNames,
+          prior.files.filterNot(f => dropSet(f.path)) ++
+            entries.map(_.copy(seq = Some(next))),
+          prior.partitionBy, prior.physicalNames,
           Some(props0 + (Tombstones.SeqProp -> next.toString)),
           prior.retired)
-        (base.tables + (key -> snap2.id), base.namespaces)
-      }
-      return loadResult(serve(repo, prefix, ref, key))
-    }
-
-    // ---- positional deletes / DVs → a server-side CoW rewrite of
-    // EXACTLY the referenced (dirty) files: the posted delete rows are
-    // applied through the independent importer's spec-sequence
-    // semantics (IcebergImport.readPlan on a sub-plan of the dirty
-    // files), the survivors land as native graft files, and one commit
-    // swaps them in atomically with the same stale-base 409 every REST
-    // commit gets. Cost is O(dirty files + delete rows) — what the
-    // engine's own CoW DELETE would have paid. The FULL Flink-upsert
-    // commit shape lands in one piece (r13):
-    //  - new data files in the same commit (Spark MoR UPDATE: new rows
-    //    + positions masking the old) ride the same commit;
-    //  - positions may reference SAME-COMMIT added files (Flink's
-    //    intra-checkpoint dedup) — those adds are rewritten instead of
-    //    registered verbatim;
-    //  - equality deletes may ride the same commit: per the spec they
-    //    apply STRICTLY BELOW the commit's sequence, so they are
-    //    applied physically to the dirty base files' survivors during
-    //    the rewrite and land as a tombstone for the untouched files;
-    //    same-commit adds stay exempt.
-    if (posDeletes.nonEmpty) {
-      val pm = materializePosDeletes(repo, ref, key, destRoot, head,
-        basePlan, addedFiles, posDeletes, eqDeletes, hconf)
-      repo.commitRetry(ref, s"rest: $op $key (positional deletes " +
-        s"materialized: ${pm.dirtyBase} base file(s) rewritten, " +
-        s"${pm.dirtyAdds} add(s) folded, +${pm.cleanEntries.size} new" +
-        (if (pm.eqFilter.isDefined) ", equality tombstone" else "") + ")") {
-        base =>
-          pin(base)
-          val prior = repo.snapshot(base.tables(key))
-          // the shared member lowering: survivors + clean adds stamp at
-          // the next sequence (exempt from the equality tombstone by
-          // the strictly-lower rule), dirty base files leave the live
-          // set — identical to a transaction member's
-          val snap2 = memberSnapshot(repo, key, prior,
-            pm.rewritten ++ pm.cleanEntries, pm.eqFilter,
-            pm.dropBaseRels, Nil, setProps, removeProps)
-          (base.tables + (key -> snap2.id), base.namespaces)
-      }
-      return loadResult(serve(repo, prefix, ref, key))
-    }
-
-
-    val entries = ingestEntries(repo, ref, key, destRoot, addedFiles,
-      ev.schema, ev.mapping, ev.spec, hconf)
-
-    // equality deletes → ONE tombstone predicate (Or across files/rows)
-    val morFilter: Option[org.apache.spark.sql.sources.Filter] =
-      if (eqDeletes.isEmpty) None
-      else Some(equalityTombstoneFilter(repo, destRoot, eqDeletes,
-        basePlan.fieldIdToName, hconf))
-
-    val pinMsg: graft.versioned.Commit => Unit = pin
-    if (morFilter.isDefined) {
-      // MoR commit: tombstone + (optionally) same-sequence new files —
-      // graft's morUpdate commit shape, arriving over REST (the shared
-      // member lowering — identical to a transaction member's)
-      repo.commitRetry(ref, s"rest: $op $key (merge-on-read, " +
-        s"+${entries.size} files)") { base =>
-        pinMsg(base)
-        val prior = repo.snapshot(base.tables(key))
-        val ns2 = memberSnapshot(repo, key, prior, entries, morFilter,
-          Nil, Nil, setProps, removeProps)
-        (base.tables + (key -> ns2.id), base.namespaces)
-      }
-    } else if (op == "append" && schemaChanges.nonEmpty) {
-      // evolution + first write under the new schema, atomically (the
-      // shared member lowering — identical to a transaction member's)
-      repo.commitRetry(ref, s"rest: evolve+append $key " +
-        s"(+${entries.size} files)") { base =>
-        pinMsg(base)
-        val prior = repo.snapshot(base.tables(key))
-        val ns2 = memberSnapshot(repo, key, prior, entries, None, Nil,
-          schemaChanges, setProps, removeProps)
-        (base.tables + (key -> ns2.id), base.namespaces)
-      }
-    } else if (op == "append")
-      TableOps.commitAppend(repo, ref, key, entries, overwrite = false,
-        ev.spec, ev.mapping, head.schemaJson,
-        Some(s"rest: append $key (${entries.size} files, " +
-          s"${entries.map(_.rows).sum} rows)"),
-        setProps, precheck = pin, removeProps = removeProps)
-    else {
-      // the engine's CoW rewrite: dropped base files must be data-plane
-      // rels (they are — the served export references them in place)
-      val dropRels = dropped.toSeq.sorted.map { loc =>
-        repo.dataIO.relOf(loc).getOrElse(
-          throw new IllegalStateException(
-            s"base data file outside the repo data plane: $loc"))
-      }
-      TableOps.commitRewrite(repo, ref, key, dropRels.toSet, entries,
-        Some(s"rest: $op $key (+${entries.size}/-${dropRels.size} files, " +
-          s"+${entries.map(_.rows).sum} rows)"),
-        setProps, precheck = pin, removeProps = removeProps)
-    }
-    loadResult(serve(repo, prefix, ref, key))
+        acc + (key -> snap2.id)
+      }, marker = Some(Commit.CompactMarker))
   }
 
-
-
-  /** The ONE commit-member lowering: builds (and writes) the snapshot a
-    * member's validated pieces produce against `prior`. Shared by the
-    * single-table MoR / evolve+append / positional-delete commit
-    * closures AND every multi-table transaction member, so the
-    * semantics cannot drift between the one-table and atomic-fold
-    * paths: a metadata-only member (no files, no deletes, no drops)
-    * evolves schema/properties with NO sequence bump; an evolve+append
-    * member stamps its files at the next MoR sequence under the schema
-    * it adds; otherwise entries stamp at the next sequence, an equality
+  /** Build (and write) the snapshot a member's validated pieces
+    * produce against `prior`: a metadata-only member (no files, no
+    * deletes, no drops) evolves schema/properties with NO sequence bump;
+    * an evolve+append member stamps its files at the next MoR sequence
+    * under the schema it adds; otherwise entries stamp at the next
+    * sequence, an equality
     * filter lands as a tombstone masking strictly-lower sequences
     * (same-commit adds exempt by graft's strict `>` applicability),
     * and drops leave the live set — re-validated live against `prior`
@@ -1893,9 +1931,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
     }
 
   /** Rewritten-file pieces of a lowered positional-delete commit (see
-    * [[materializePosDeletes]]): registered inside whichever atomic
-    * commit the caller runs — the single-table commit or a member slot
-    * of a multi-table transaction.
+    * [[materializePosDeletes]]), registered by the member's fold.
     */
   private final case class PosMaterialized(
       rewritten: Seq[FileEntry], dropBaseRels: Seq[String],
@@ -2044,11 +2080,7 @@ final class IcebergRestServer private (single: Option[GraftRepo],
           bloomCols = Blooms.physCols(head,
             TableOps.toPhysical(gSchema, head.nameMapping)),
           bloomItems = Blooms.items(head))
-      val dropRels = dirtyBaseNorm.map(baseByNorm).map { f =>
-        repo.dataIO.relOf(f.path).getOrElse(
-          throw new IllegalStateException(
-            s"base data file outside the repo data plane: ${f.path}"))
-      }
+      val dropRels = dirtyBaseNorm.map(n => dataRel(repo, baseByNorm(n).path))
       // clean adds register as usual; dirty adds were folded into the
       // rewrite above and must not land twice
       val cleanEntries = ingestEntries(repo, ref, key, destRoot,
@@ -2058,557 +2090,6 @@ final class IcebergRestServer private (single: Option[GraftRepo],
       PosMaterialized(rewritten, dropRels, cleanEntries, eqFilter,
         dirtyBaseNorm.size, dirtyAddNorm.size)
     }
-
-  /** CommitTransactionRequest — the spec's MULTI-TABLE transaction:
-    * every table-change lands in ONE graft commit, so fact + dimension
-    * appends publish together or not at all. This is the repo-level
-    * transactionality the reference's design inherits from lakeFS (a
-    * lakeFS commit captures whole-repo state) and that per-table
-    * Iceberg catalogs cannot give — graft's native commit model serves
-    * it directly (the REST analog of [[TableOps.atomicAppend]]).
-    *
-    * Scope: each change may carry an APPEND snapshot (posted state ⊇
-    * base; the table's own served delete files may be relisted as
-    * always), a schema update — alone (metadata-only) or COMBINED
-    * with the snapshot (the engine checkpoint that widens and appends
-    * one table while siblings append; lowered like the single-table
-    * evolve+append) — equality delete files (the Flink-upsert member
-    * shape, lowered onto a predicate tombstone with same-commit adds
-    * exempt), a CoW REWRITE (r15: dropped base files leave the live
-    * set, adds register at the member's sequence — the single-table
-    * commitRewrite lowering riding the one commit), POSITIONAL delete
-    * files / DVs (r15: lowered onto the same per-table server-side CoW
-    * rewrite the single-table path runs; the distributed rewrite
-    * happens in STAGING, before the atomic fold, so a commit retry
-    * never re-runs Spark jobs and the per-member base pin still 409s
-    * the whole transaction on staleness), and set/remove-properties,
-    * with `assert-table-uuid` / `assert-ref-snapshot-id` requirements.
-    * All tables must live on ONE branch (a graft commit is
-    * per-branch). A member may also be a staged CREATE
-    * (`assert-create` — the Flink side-output-table checkpoint shape);
-    * replace (compaction) and rollbacks stay single-table commits (no
-    * mainstream engine posts them multi-table).
-    */
-  private def commitTransaction(repo: GraftRepo, prefix: Option[String],
-      req: com.fasterxml.jackson.databind.JsonNode): Unit = {
-    val changes = Option(req.get("table-changes")).toSeq
-      .flatMap(_.elements().asScala).toSeq
-    if (changes.isEmpty) throw new IllegalArgumentException(
-      "transaction carries no table-changes")
-    val hconf = spark.map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-
-    final case class Staged(ref: String, key: String,
-      servedGraftSnap: String, entries: Seq[FileEntry],
-      setProps: Map[String, String], removeProps: Set[String],
-      schemaChanges: Seq[org.apache.spark.sql.connector.catalog.TableChange],
-      eqFilter: Option[org.apache.spark.sql.sources.Filter],
-      dropRels: Seq[String],
-      create: Option[StagedCreate] = None, createDirs: Seq[String] = Nil)
-
-    def stageMember(ch: com.fasterxml.jackson.databind.JsonNode,
-        ns: Seq[String], name: String): Staged = {
-      val (ref, key) = resolveKey(repo, ns, name)
-      if (!repo.branchExists(ref)) throw new IllegalArgumentException(
-        s"transactions commit to a branch; $ref is a tag")
-      val metaPath = serve(repo, prefix, ref, key)
-      val served = mapper.readTree(Files.readString(metaPath))
-      val servedGraftSnap =
-        served.get("properties").get("graft.source-snapshot").asText()
-      val servedSnapId = Option(served.get("current-snapshot-id"))
-        .map(_.asLong()).filter(_ != -1L)
-      Option(ch.get("requirements")).toSeq
-        .flatMap(_.elements().asScala).foreach { r =>
-          text(r, "type") match {
-            case "assert-table-uuid" =>
-              val want = text(r, "uuid")
-              val have = served.get("table-uuid").asText()
-              if (want != have)
-                throw new RestConflict("CommitFailedException",
-                  s"table uuid changed for $key: expected $want, found $have")
-            case "assert-ref-snapshot-id" =>
-              val rn = Option(r.get("ref")).map(_.asText()).getOrElse("main")
-              if (rn != "main") throw new IllegalArgumentException(
-                s"graft serves one Iceberg branch (main) per graft ref: $rn")
-              val want = Option(r.get("snapshot-id")).filterNot(_.isNull)
-                .map(_.asLong())
-              if (want != servedSnapId)
-                throw new RestConflict("CommitFailedException",
-                  s"branch main moved for $key: expected " +
-                    s"${want.getOrElse("<none>")}, now at " +
-                    s"${servedSnapId.getOrElse("<none>")}")
-            case other => throw new UnsupportedOperationException(
-              s"unsupported requirement inside a transaction: $other")
-          }
-        }
-      var snapNode: Option[com.fasterxml.jackson.databind.JsonNode] = None
-      var newSchemaNode: Option[com.fasterxml.jackson.databind.JsonNode] = None
-      var setCurrentSchema: Option[Int] = None
-      var setRefTargetTxn: Option[Long] = None
-      var setProps = Map.empty[String, String]
-      var removeProps = Set.empty[String]
-      def guardProp(k: String): String = {
-        if (k.startsWith("graft."))
-          throw new UnsupportedOperationException(
-            s"$k is engine-managed graft state; not settable over REST")
-        k
-      }
-      Option(ch.get("updates")).toSeq
-        .flatMap(_.elements().asScala).foreach { u =>
-          text(u, "action") match {
-            case "add-snapshot" =>
-              if (snapNode.isDefined)
-                throw new UnsupportedOperationException(
-                  s"one add-snapshot per table in a transaction ($key)")
-              snapNode = Some(Option(u.get("snapshot")).getOrElse(
-                throw new IllegalArgumentException(
-                  "add-snapshot carries no snapshot")))
-            case "set-snapshot-ref" =>
-              val rn = Option(u.get("ref-name")).map(_.asText())
-                .getOrElse("main")
-              if (rn != "main") throw new IllegalArgumentException(
-                s"graft serves one Iceberg branch (main) per graft ref: $rn")
-              setRefTargetTxn = Option(u.get("snapshot-id"))
-                .filterNot(_.isNull).map(_.asLong())
-            case "set-properties" =>
-              setProps ++= Option(u.get("updates")).toSeq
-                .flatMap(_.fields().asScala)
-                .map(e => guardProp(e.getKey) -> e.getValue.asText())
-            case "remove-properties" =>
-              removeProps ++= Option(u.get("removals")).toSeq
-                .flatMap(_.elements().asScala).map(n => guardProp(n.asText()))
-            // a METADATA-ONLY schema evolution riding a multi-table
-            // checkpoint (the common Flink shape: one table's columns
-            // widened while its siblings append) — lowered onto graft's
-            // metadata-only evolution, same as the single-table path
-            case "add-schema" =>
-              if (newSchemaNode.isDefined)
-                throw new UnsupportedOperationException(
-                  s"one add-schema per table in a transaction ($key)")
-              newSchemaNode = Some(Option(u.get("schema")).getOrElse(
-                throw new IllegalArgumentException(
-                  "add-schema carries no schema")))
-            case "set-current-schema" =>
-              setCurrentSchema = Some(Option(u.get("schema-id"))
-                .map(_.asInt()).getOrElse(-1))
-            case other => throw new UnsupportedOperationException(
-              s"unsupported update inside a transaction: $other — " +
-                "transactions bundle append/evolve+append/rewrite/" +
-                "equality- and positional-delete commits, property " +
-                "updates, schema updates, and staged CREATEs " +
-                "(assert-create); replace (compaction) and rollbacks " +
-                "stay single-table commits")
-          }
-        }
-      // a member's ref target must be the snapshot IT adds (or the
-      // served current): anything else is a rollback riding a
-      // transaction — silently landing a no-op while the engine
-      // believes the ref moved would be worse than refusing
-      setRefTargetTxn.foreach { tgt =>
-        val addedId = snapNode.flatMap(n =>
-          Option(n.get("snapshot-id")).map(_.asLong()))
-        if (!addedId.contains(tgt) && !servedSnapId.contains(tgt))
-          throw new UnsupportedOperationException(
-            s"transactional change for $key sets main to snapshot $tgt," +
-              " which this member does not add — rollbacks stay " +
-              "single-table commits")
-      }
-      val servedSchemaId = Option(served.get("current-schema-id"))
-        .map(_.asInt()).getOrElse(0)
-      setCurrentSchema.foreach { sid =>
-        val addedId = newSchemaNode.flatMap(sn =>
-          Option(sn.get("schema-id")).map(_.asInt()))
-        if (sid != -1 && !addedId.contains(sid) && sid != servedSchemaId)
-          throw new IllegalArgumentException(
-            s"set-current-schema references schema-id $sid, which this " +
-              "transaction member does not add")
-      }
-      val schemaChanges: Seq[org.apache.spark.sql.connector.catalog.TableChange] =
-        newSchemaNode.map { n =>
-          val cur = Option(served.get("schemas"))
-            .map(_.elements().asScala.toSeq).getOrElse(Nil)
-            .find(sn => Option(sn.get("schema-id"))
-              .exists(_.asInt() == servedSchemaId))
-            .getOrElse(throw new IllegalStateException(
-              s"served metadata has no schema $servedSchemaId"))
-          schemaChangesOf(cur, n)
-        }.getOrElse(Nil)
-      val (entries: Seq[FileEntry],
-           eqFilter: Option[org.apache.spark.sql.sources.Filter],
-           dropRels: Seq[String]) =
-        snapNode match {
-        case None => (Nil, None, Nil)
-        case Some(snap) =>
-          val op = Option(snap.get("summary")).flatMap(s =>
-            Option(s.get("operation"))).map(_.asText()).getOrElse("append")
-          if (!Set("append", "overwrite", "delete")(op))
-            throw new UnsupportedOperationException(
-              s"unsupported transactional commit operation: '$op' " +
-                "(accepted: append, overwrite, delete)")
-          val v = served.get("format-version").asInt()
-          val (postedData, postedDeletes) =
-            try IcebergImport.filesOfManifestList(
-              text(snap, "manifest-list"), v)
-            catch {
-              case e @ (_: java.io.IOException |
-                        _: org.apache.avro.AvroRuntimeException) =>
-                throw new IllegalArgumentException(
-                  s"posted manifest-list is unreadable: ${e.getMessage}")
-            }
-          val basePlan = IcebergImport.plan(metaPath.toString, None)
-          val servedDeletePaths = basePlan.deleteFiles
-            .map(d => IcebergImport.normStr(d.path)).toSet
-          val newDeletes = postedDeletes.filterNot(d =>
-            servedDeletePaths(IcebergImport.normStr(d.path)))
-          // EQUALITY delete members — the Flink-upsert checkpoint
-          // shape — lower onto graft predicate tombstones exactly as
-          // the single-table path does (same-commit adds land at the
-          // tombstone's sequence and are exempt by graft's strict `>`
-          // applicability). POSITIONAL delete / DV members (r15) lower
-          // onto the same per-table server-side CoW rewrite the
-          // single-table path runs ([[materializePosDeletes]]): the
-          // Spark jobs run here in STAGING, the atomic fold only
-          // registers the survivors — so a member's rewrite never
-          // re-runs on a commit retry, and the per-member base pin
-          // still 409s the whole transaction on any staleness.
-          val (eqDels, posDels) =
-            newDeletes.partition(d => d.content == 2 && d.dv.isEmpty)
-          if (posDels.nonEmpty && op == "append")
-            throw new IllegalArgumentException(
-              s"transactional append for $key carries positional " +
-                "delete files (post operation=overwrite or delete)")
-          if (posDels.nonEmpty && schemaChanges.nonEmpty)
-            throw new UnsupportedOperationException(
-              s"transactional change for $key mixes a schema update " +
-                "with positional deletes — post them as two members " +
-                "or two transactions")
-          if (eqDels.nonEmpty && op == "append")
-            throw new IllegalArgumentException(
-              s"transactional append for $key carries equality delete " +
-                "files (post operation=overwrite or delete)")
-          if (eqDels.nonEmpty && schemaChanges.nonEmpty)
-            throw new UnsupportedOperationException(
-              s"transactional change for $key mixes a schema update " +
-                "with equality deletes — post them as two members or " +
-                "two transactions")
-          val basePaths = basePlan.dataPaths.toSet
-          val dropped = basePaths -- postedData.map(_.path).toSet
-          // a CoW REWRITE member (r15): dropped base files leave the
-          // live set, added files register at the member's sequence —
-          // the single-table commitRewrite lowering riding the one
-          // multi-table commit (an engine checkpoint that compacts or
-          // CoW-deletes one table while siblings append)
-          if (dropped.nonEmpty && op == "append")
-            throw new UnsupportedOperationException(
-              s"transactional change for $key drops ${dropped.size} " +
-                "base data file(s) — not an append (post " +
-                "operation=overwrite to rewrite files)")
-          if (dropped.nonEmpty && eqDels.nonEmpty)
-            throw new UnsupportedOperationException(
-              s"transactional change for $key mixes dropped data files " +
-                "(CoW) with equality delete files (MoR) — post them as " +
-                "two members")
-          if (dropped.nonEmpty && posDels.nonEmpty)
-            throw new UnsupportedOperationException(
-              s"transactional change for $key mixes dropped data files " +
-                "(CoW) with positional delete files (MoR) — post them " +
-                "as two members")
-          if (dropped.nonEmpty && schemaChanges.nonEmpty)
-            throw new UnsupportedOperationException(
-              s"transactional change for $key mixes a schema update " +
-                "with dropped data files — schema changes combine only " +
-                "with appends")
-          val head = repo.snapshot(repo.resolve(ref).tables(key))
-          val destRoot = prefix.fold(exportRoot)(exportRoot.resolve)
-            .resolve(ref).resolve(key).toAbsolutePath.normalize
-          // a member combining a schema update WITH a snapshot (the
-          // engine checkpoint that widens AND appends one table while
-          // siblings append) ingests its files under the schema it
-          // ADDS — the same lowering as the single-table evolve+append
-          val ev = SchemaEvolution.evolve(head, schemaChanges)
-          if (posDels.nonEmpty) {
-            val pm = materializePosDeletes(repo, ref, key, destRoot,
-              head, basePlan, postedData.filterNot(d => basePaths(d.path)),
-              posDels, eqDels, hconf)
-            (pm.rewritten ++ pm.cleanEntries, pm.eqFilter, pm.dropBaseRels)
-          } else {
-            val filt =
-              if (eqDels.isEmpty) None
-              else Some(equalityTombstoneFilter(repo, destRoot, eqDels,
-                basePlan.fieldIdToName, hconf))
-            val dropRels = dropped.toSeq.sorted.map { loc =>
-              repo.dataIO.relOf(loc).getOrElse(
-                throw new IllegalStateException(
-                  s"base data file outside the repo data plane: $loc"))
-            }
-            (ingestEntries(repo, ref, key, destRoot,
-              postedData.filterNot(d => basePaths(d.path)),
-              ev.schema, ev.mapping, ev.spec, hconf), filt, dropRels)
-          }
-      }
-      Staged(ref, key, servedGraftSnap, entries, setProps, removeProps,
-        schemaChanges, eqFilter, dropRels)
-    }
-
-    // members stage on up to 3 driver threads (the TableOps
-    // .stageConcurrently shape — guide §2.6): each member touches its
-    // OWN table (duplicates rejected below), serve() locks per served
-    // table, and the heavy member work (footer reads, the positional-
-    // delete CoW lowering's Spark jobs) is independent — staging them
-    // serially idled the cluster through each member's job-submission
-    // latency. Failures surface in member order exactly as before
-    // (first failing member's error wins; siblings' already-staged
-    // files are orphans until vacuum — the same contract as a serial
-    // partial failure), with the remaining stages cancelled.
-    def stageOne(ch: com.fasterxml.jackson.databind.JsonNode): Staged = {
-      val ident = Option(ch.get("identifier")).getOrElse(
-        throw new IllegalArgumentException(
-          "table-change carries no identifier"))
-      val ns = Option(ident.get("namespace")).toSeq
-        .flatMap(_.elements().asScala).map(_.asText()).toSeq
-      val name = text(ident, "name")
-      val reqNodes = Option(ch.get("requirements")).toSeq
-        .flatMap(_.elements().asScala).toSeq
-      // a CTAS MEMBER (requirement assert-create): the engine
-      // checkpoint that creates a side-output table in the same atomic
-      // commit as its siblings' appends. Staging reuses the
-      // single-table staged-create machinery; the existence race is
-      // decided inside the atomic fold (a losing racer 409s the WHOLE
-      // transaction, and an abandoned stage never touched the branch).
-      if (reqNodes.exists(r => text(r, "type") == "assert-create")) {
-        val (ref, dirs) = ns match {
-          case r +: ds if ds.nonEmpty && refNames(repo).contains(r) =>
-            (r, ds)
-          case _ => throw new NoSuchElementException(
-            s"no such namespace: ${ns.mkString(".")}")
-        }
-        if (!repo.branchExists(ref)) throw new IllegalArgumentException(
-          s"transactions commit to a branch; $ref is a tag")
-        val key = (dirs :+ name).mkString("/")
-        // fast-fail before files stage; the fold re-checks atomically
-        if (repo.resolve(ref).tables.contains(key))
-          throw new RestConflict("AlreadyExistsException",
-            s"table already exists: $key @ $ref")
-        val sc = parseStagedCreate(repo, prefix, ref, key, reqNodes, ch)
-        Staged(ref, key, "", sc.entries, sc.props, Set.empty,
-          Nil, None, Nil, create = Some(sc), createDirs = dirs)
-      } else stageMember(ch, ns, name)
-    }
-    val staged: Seq[Staged] =
-      if (changes.size <= 1) changes.map(stageOne)
-      else {
-        val pool = Executors.newFixedThreadPool(math.min(changes.size, 3))
-        try {
-          val futures = changes.map(ch =>
-            pool.submit(new java.util.concurrent.Callable[Staged] {
-              override def call(): Staged = stageOne(ch)
-            }))
-          futures.map(f =>
-            try f.get()
-            catch {
-              case e: java.util.concurrent.ExecutionException =>
-                futures.foreach(_.cancel(true))
-                pool.shutdownNow()
-                pool.awaitTermination(30,
-                  java.util.concurrent.TimeUnit.SECONDS)
-                throw Option(e.getCause).getOrElse(e)
-            })
-        } finally pool.shutdown()
-      }
-    val refs = staged.map(_.ref).distinct
-    if (refs.size != 1) throw new IllegalArgumentException(
-      s"a transaction commits to ONE branch; got ${refs.mkString(", ")} " +
-        "— post per-branch transactions")
-    val dupKeys = staged.groupBy(_.key).filter(_._2.size > 1).keys
-    if (dupKeys.nonEmpty) throw new IllegalArgumentException(
-      s"a transaction names each table once; duplicated: " +
-        dupKeys.mkString(", "))
-    val ref = refs.head
-    // ONE graft commit: all tables' appends + property updates publish
-    // together or not at all; any table's served base gone stale → 409
-    // for the WHOLE transaction (the engine refreshes and replays)
-    repo.commitRetry(ref, s"rest: transaction " +
-      s"(${staged.map(_.key).mkString(", ")})") { base =>
-      val updated = staged.foldLeft(base.tables) { case (acc, st) =>
-        st.create match {
-          case Some(sc) =>
-            // the assert-create race, decided atomically: exactly one
-            // concurrent creator wins; the loser 409s the WHOLE
-            // transaction (its siblings' appends roll back with it).
-            // acc is checked too as a belt — duplicate same-key members
-            // are already rejected by the names-each-table-once guard
-            // above, so acc cannot differ from base here today
-            if (base.tables.contains(st.key) || acc.contains(st.key))
-              throw new RestConflict("AlreadyExistsException",
-                s"table already exists: ${st.key} @ $ref")
-            val stamped = st.entries.map(_.copy(seq = Some(1L)))
-            val allProps = sc.props ++
-              (if (st.entries.isEmpty) Map.empty
-               else Map(Tombstones.SeqProp -> "1"))
-            val snap = repo.writeSnapshot(st.key, sc.schema.json, stamped,
-              if (sc.spec.isEmpty) None else Some(sc.spec), None,
-              if (allProps.isEmpty) None else Some(allProps))
-            acc + (st.key -> snap.id)
-          case None =>
-            if (!base.tables.get(st.key).contains(st.servedGraftSnap))
-              throw new RestConflict("CommitFailedException",
-                s"branch $ref moved since the served base of ${st.key} — " +
-                  "refresh and retry")
-            val prior = acc.get(st.key).map(repo.snapshot).getOrElse(
-              throw new NoSuchElementException(s"no such table: ${st.key}"))
-            val snap2 = memberSnapshot(repo, st.key, prior, st.entries,
-              st.eqFilter, st.dropRels, st.schemaChanges, st.setProps,
-              st.removeProps)
-            acc + (st.key -> snap2.id)
-        }
-      }
-      // a create member registers its namespace too (same rule as the
-      // single-table staged create: no-op when it already exists)
-      val ns2 = staged.foldLeft(base.namespaces) { (acc, st) =>
-        if (st.create.isEmpty || st.createDirs.isEmpty) acc
-        else {
-          val k = st.createDirs.mkString("/")
-          if (acc.contains(k)) acc
-          else acc + (k -> Map.empty[String, String])
-        }
-      }
-      (updated, ns2)
-    }
-  }
-
-  /** The spec's staged-create publish (`stage-create: true` then a
-    * commit with requirement `assert-create`): the posted metadata
-    * updates carry the full table build — schema, partition spec,
-    * properties, first snapshot — and land as ONE graft commit, so a
-    * CTAS from an external engine is atomic: concurrent staged creates
-    * race on `base.tables.contains(key)` and exactly one wins; an
-    * abandoned stage never touched the branch and leaves nothing.
-    */
-  /** Parsed staged-create publish: the posted metadata updates carry
-    * the full table build (shared by the single-table staged-create
-    * route and CTAS members inside [[commitTransaction]]).
-    */
-  private final case class StagedCreate(
-      schema: org.apache.spark.sql.types.StructType,
-      spec: Seq[PartitionField], props: Map[String, String],
-      entries: Seq[FileEntry])
-
-  private def parseStagedCreate(repo: GraftRepo, prefix: Option[String],
-      ref: String, key: String,
-      reqs: Seq[com.fasterxml.jackson.databind.JsonNode],
-      req: com.fasterxml.jackson.databind.JsonNode): StagedCreate = {
-    reqs.foreach { r =>
-      text(r, "type") match {
-        case "assert-create" => ()
-        case other => throw new UnsupportedOperationException(
-          s"unsupported requirement on a staged create: $other")
-      }
-    }
-    var schemaNode: Option[com.fasterxml.jackson.databind.JsonNode] = None
-    var specNode: Option[com.fasterxml.jackson.databind.JsonNode] = None
-    var snapNode: Option[com.fasterxml.jackson.databind.JsonNode] = None
-    var props = Map.empty[String, String]
-    Option(req.get("updates")).toSeq
-      .flatMap(_.elements().asScala).foreach { u =>
-        text(u, "action") match {
-          // identity/serving details graft assigns itself on export:
-          case "assign-uuid" | "upgrade-format-version" | "set-location" => ()
-          // graft tables have no sort orders; an engine's declared
-          // order is advisory (write-side clustering), safe to drop
-          case "add-sort-order" | "set-default-sort-order" => ()
-          case "set-current-schema" | "set-default-spec" => ()
-          case "add-schema" =>
-            if (schemaNode.isDefined) throw new UnsupportedOperationException(
-              "one add-schema per staged create")
-            schemaNode = Some(Option(u.get("schema")).getOrElse(
-              throw new IllegalArgumentException("add-schema carries no schema")))
-          case "add-partition-spec" =>
-            if (specNode.isDefined) throw new UnsupportedOperationException(
-              "one add-partition-spec per staged create")
-            specNode = Option(u.get("spec")).orElse(Some(u))
-          case "set-properties" =>
-            props ++= Option(u.get("updates")).toSeq
-              .flatMap(_.fields().asScala)
-              .map { e =>
-                if (e.getKey.startsWith("graft."))
-                  throw new UnsupportedOperationException(
-                    s"${e.getKey} is engine-managed graft state; not " +
-                      "settable over REST")
-                e.getKey -> e.getValue.asText()
-              }
-          case "add-snapshot" =>
-            if (snapNode.isDefined) throw new UnsupportedOperationException(
-              "one add-snapshot per staged create")
-            snapNode = Some(Option(u.get("snapshot")).getOrElse(
-              throw new IllegalArgumentException(
-                "add-snapshot carries no snapshot")))
-          case "set-snapshot-ref" =>
-            val rn = Option(u.get("ref-name")).map(_.asText()).getOrElse("main")
-            if (rn != "main") throw new IllegalArgumentException(
-              s"graft serves one Iceberg branch (main) per graft ref: $rn")
-          case other => throw new UnsupportedOperationException(
-            s"unsupported metadata update on a staged create: $other")
-        }
-      }
-    val sNode = schemaNode.getOrElse(throw new IllegalArgumentException(
-      "staged create commit carries no add-schema"))
-    val schema = IcebergImport.structOf(sNode)
-    val idToName = Option(sNode.get("fields")).toSeq
-      .flatMap(_.elements().asScala).map(fieldIdName).toMap
-    val spec = specNode
-      .map(n => Option(n.get("fields")).getOrElse(n))
-      .map(_.elements().asScala.map(partitionFieldOf(_, idToName)).toSeq)
-      .getOrElse(Nil)
-    TableOps.validateSpec(schema, spec)
-
-    // first snapshot's files (a zero-row CTAS may post none)
-    val destRoot = prefix.fold(exportRoot)(exportRoot.resolve)
-      .resolve(ref).resolve(key).toAbsolutePath.normalize
-    val hconf = spark.map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    val entries = snapNode.map { snap =>
-      // the engine wrote its manifest list against the staged metadata
-      // this server handed out, which serves at `formatVersion`
-      val (postedData, postedDeletes) = IcebergImport.filesOfManifestList(
-        text(snap, "manifest-list"), formatVersion)
-      if (postedDeletes.nonEmpty) throw new UnsupportedOperationException(
-        "a staged create's first snapshot carries delete files")
-      ingestEntries(repo, ref, key, destRoot, postedData, schema,
-        Map.empty, spec, hconf)
-    }.getOrElse(Nil)
-    StagedCreate(schema, spec, props, entries)
-  }
-
-  /** The spec's staged-create publish as its own commit (the
-    * single-table CTAS route). */
-  private def commitStagedCreate(repo: GraftRepo, prefix: Option[String],
-      ref: String, dirs: Seq[String], key: String,
-      reqs: Seq[com.fasterxml.jackson.databind.JsonNode],
-      req: com.fasterxml.jackson.databind.JsonNode): ObjectNode = {
-    val sc = parseStagedCreate(repo, prefix, ref, key, reqs, req)
-    val schema = sc.schema
-    val spec = sc.spec
-    val props = sc.props
-    val entries = sc.entries
-
-    repo.commitRetry(ref, s"rest: create table $key (staged, " +
-      s"${entries.size} files, ${entries.map(_.rows).sum} rows)") { base =>
-      if (base.tables.contains(key))
-        throw new RestConflict("AlreadyExistsException",
-          s"table already exists: $key @ $ref")
-      val stamped = entries.map(_.copy(seq = Some(1L)))
-      val allProps = props ++
-        (if (entries.isEmpty) Map.empty
-         else Map(Tombstones.SeqProp -> "1"))
-      val snap = repo.writeSnapshot(key, schema.json, stamped,
-        if (spec.isEmpty) None else Some(spec), None,
-        if (allProps.isEmpty) None else Some(allProps))
-      (base.tables + (key -> snap.id),
-        if (base.namespaces.contains(dirs.mkString("/"))) base.namespaces
-        else base.namespaces + (dirs.mkString("/") -> Map.empty[String, String]))
-    }
-    loadResult(serve(repo, prefix, ref, key))
-  }
 
   /** Register the posted added files and derive their [[FileEntry]]
     * metadata: zero-copy for files already under the data plane,
@@ -3674,6 +3155,73 @@ private final class RestConflict(val typ: String, msg: String)
   extends RuntimeException(msg)
 
 object IcebergRestServer {
+
+  /** The Iceberg schema id an engine gave the current schema when it
+    * added it inside a transaction (engine state, never served). The
+    * export serves every current schema as id 0, and the single-table
+    * route hands that metadata back; a transaction answers 204 without
+    * metadata, so an engine may go on posting its own id. The record
+    * names the graft schema it was made for and lapses once anything
+    * changes the schema. */
+  private val SchemaIdProp = "graft.rest.schema-id"
+  private def schemaIdRecord(id: Int, schemaJson: String): String =
+    s"$id:${Integer.toHexString(schemaJson.hashCode)}"
+
+  /** A posted commit requirement, typed. */
+  private sealed trait Requirement
+  private case object AssertCreate extends Requirement
+  private final case class AssertUuid(uuid: String) extends Requirement
+  private final case class AssertRef(ref: String, snapshotId: Option[Long])
+    extends Requirement
+  /** An integer field of the served metadata (`field`, absent =
+    * `default`) must still read `want`. */
+  private final case class AssertField(field: String, default: Int,
+      what: String, want: Int) extends Requirement
+
+  /** One posted TableChange, parsed once for every route. */
+  private final case class Change(ref: String, dirs: Seq[String],
+      key: String, create: Boolean, reqs: Seq[Requirement],
+      snapshot: Option[JsonNode] = None, schema: Option[JsonNode] = None,
+      currentSchema: Option[Int] = None, spec: Option[JsonNode] = None,
+      defaultSpec: Boolean = false, mainRef: Option[Long] = None,
+      tagCreate: Option[(String, Long)] = None,
+      tagRemove: Option[String] = None,
+      setProps: Map[String, String] = Map.empty,
+      removeProps: Set[String] = Set.empty,
+      formatVersion: Option[Int] = None, uuid: Option[String] = None,
+      location: Boolean = false, advisory: Boolean = false) {
+    def props: Boolean = setProps.nonEmpty || removeProps.nonEmpty
+    /** Only updates that validate to no-ops: advisory ones, the served
+      * format version or uuid, or a ref set to the current snapshot. */
+    def noOps: Boolean =
+      advisory || formatVersion.isDefined || uuid.isDefined || mainRef.isDefined
+  }
+
+  /** The served metadata a change validates against. `pin` re-checks it
+    * INSIDE the commit race: a branch that moved since the served base
+    * answers 409, the client's signal to refresh and retry. */
+  private final case class Served(ref: String, key: String, path: Path,
+      meta: JsonNode, graftSnap: String, snapId: Option[Long],
+      schemaId: Int) {
+    def pin(b: Commit): Unit =
+      if (!b.tables.get(key).contains(graftSnap))
+        throw new RestConflict("CommitFailedException",
+          s"branch $ref moved since the served base of $key — refresh " +
+            "and retry")
+  }
+
+  /** A validated change. `only` names a member kind that cannot share
+    * its commit; `stage` does the member's expensive work. */
+  private final case class Member(only: Option[String], stage: () => Staged)
+
+  /** A staged member. `fold` runs inside the one commitRetry and maps
+    * the folded table map to include this member; a member that
+    * `writes` nothing only re-checks its base there (a validated no-op;
+    * no commit is made when no member writes). */
+  private final case class Staged(key: String, message: String,
+      writes: Boolean,
+      fold: (Commit, Map[String, String]) => Map[String, String],
+      marker: Option[String] = None, namespace: Option[String] = None)
 
   /** Start serving ONE `repo` on 127.0.0.1:`port` (0 = ephemeral; read
     * the bound port back from [[IcebergRestServer.port]]). `exportRoot`

@@ -166,7 +166,8 @@ object TableOps {
   // ---- write -----------------------------------------------------------
 
   /** Stage each table of a multi-table commit on its own driver thread,
-    * preserving input order. The per-table write jobs are independent
+    * preserving input order (atomicAppend / atomicReplace tables, REST
+    * transaction members). The per-table write jobs are independent
     * (writeFiles lands each table under its own UUID dir and reads its
     * own session clone for conf overrides), and Spark happily runs
     * several jobs at once — staging them sequentially left the cluster
@@ -179,14 +180,14 @@ object TableOps {
     * orphans until vacuum, the same contract as a sequential partial
     * failure).
     */
-  private def stageConcurrently[A](tables: Seq[(String, DataFrame)])(
-      stage: ((String, DataFrame)) => A): Seq[A] =
-    if (tables.size <= 1) tables.map(stage)
+  private[versioned] def stageConcurrently[T, A](items: Seq[T])(
+      stage: T => A): Seq[A] =
+    if (items.size <= 1) items.map(stage)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(tables.size, 3))
+        math.min(items.size, 3))
       try {
-        val futures = tables.map(t =>
+        val futures = items.map(t =>
           pool.submit(new java.util.concurrent.Callable[A] {
             override def call(): A = stage(t)
           }))
@@ -204,7 +205,7 @@ object TableOps {
               pool.shutdownNow()
               pool.awaitTermination(30,
                 java.util.concurrent.TimeUnit.SECONDS)
-              throw e.getCause
+              throw Option(e.getCause).getOrElse(e)
           })
       } finally pool.shutdown()
     }
@@ -510,22 +511,13 @@ object TableOps {
       newFiles: Seq[FileEntry], overwrite: Boolean,
       spec: Seq[PartitionField], mapping: Map[String, String],
       fallbackSchemaJson: String, message: Option[String] = None,
-      extraProps: Map[String, String] = Map.empty,
-      precheck: Commit => Unit = _ => (),
-      removeProps: Set[String] = Set.empty): Unit = {
+      extraProps: Map[String, String] = Map.empty): Unit = {
     val msg = message.getOrElse(s"${if (overwrite) "overwrite" else "append"} $key")
     repo.commitRetry(branch, msg) { base =>
-      // caller-supplied optimistic-base validation, re-evaluated INSIDE
-      // the commit race on every retry (the REST catalog's
-      // assert-ref-snapshot-id requirement must hold at commit time,
-      // not merely at request-validation time)
-      precheck(base)
       // props re-read from the rebased head inside the race so a
       // concurrent property change (or stream-batch marker) is not lost
       val prior = base.tables.get(key).map(repo.snapshot)
-      val props0 =
-        (prior.map(_.properties).getOrElse(Map.empty) -- removeProps) ++
-          extraProps
+      val props0 = prior.map(_.properties).getOrElse(Map.empty) ++ extraProps
       // new files stamped with the table's next commit sequence: MoR
       // tombstones committed EARLIER never apply to these rows
       val next = Tombstones.lastSeq(props0) + 1
@@ -548,30 +540,19 @@ object TableOps {
     }
   }
 
-  /** Publish an external engine's copy-on-write rewrite as one commit:
-    * drop `removeRels` from the live file set, append `newFiles` at the
-    * table's next sequence — the metadata half of a REST
-    * `overwrite`/`delete` commit ([[graft.versioned.IcebergRestServer]];
-    * the reference's pointer-swap commit, `LakeFSTableOperations
-    * .commit`, java:115-147, covers exactly this shape when the engine
-    * ran a CoW DELETE/UPDATE/MERGE). Kept files' merge-on-read
-    * tombstones stay live — the rewrite replaced only the files the
-    * writer posted, whose rows it read delete-applied — and tombstones
-    * left with nothing to apply to retire inside `writeSnapshot`.
-    * `precheck` runs INSIDE the commit race on every retry; REST uses
-    * it to pin the branch head to the served base, so a concurrent MoR
-    * delete or rewrite can never be silently materialized away (compare
-    * the weaker signature check `compact` needs because its base is
-    * allowed to advance).
+  /** Publish a copy-on-write rewrite as one commit: drop `removeRels`
+    * from the live file set, append `newFiles` at the table's next
+    * sequence. Kept files' merge-on-read tombstones stay live — the
+    * rewrite replaced only the files it names, whose rows it read
+    * delete-applied — and tombstones left with nothing to apply to
+    * retire inside `writeSnapshot`. A dropped file no longer live at
+    * the commit base (a concurrent rewrite won) refuses with
+    * [[MergeConflictException]].
     */
   def commitRewrite(repo: GraftRepo, branch: String, key: String,
       removeRels: Set[String], newFiles: Seq[FileEntry],
-      message: Option[String] = None,
-      extraProps: Map[String, String] = Map.empty,
-      precheck: Commit => Unit = _ => (),
-      removeProps: Set[String] = Set.empty): Unit =
+      message: Option[String] = None): Unit =
     repo.commitRetry(branch, message.getOrElse(s"rewrite $key")) { base =>
-      precheck(base)
       val prior = base.tables.get(key).map(repo.snapshot).getOrElse(
         throw new NoSuchElementException(s"no such table: $key"))
       val live = prior.files.iterator.map(_.path).toSet
@@ -579,11 +560,10 @@ object TableOps {
       if (missing.nonEmpty) throw new MergeConflictException(
         s"rewrite of $key drops ${missing.size} file(s) not live at the " +
           s"commit base (e.g. ${missing.head}) — refresh and retry")
-      val props0 = (prior.properties -- removeProps) ++ extraProps
-      val next = Tombstones.lastSeq(props0) + 1
+      val next = Tombstones.lastSeq(prior.properties) + 1
       val stamped = newFiles.map(_.copy(seq = Some(next)))
       val kept = prior.files.filterNot(f => removeRels(f.path))
-      val props = props0 + (Tombstones.SeqProp -> next.toString)
+      val props = prior.properties + (Tombstones.SeqProp -> next.toString)
       val snap = repo.writeSnapshot(key, prior.schemaJson,
         kept ++ stamped, prior.partitionBy, prior.physicalNames,
         Some(props), prior.retired)
@@ -1370,46 +1350,49 @@ object TableOps {
     * never-reused field ids. Returns the spec as committed.
     */
   def setPartitionSpec(repo: GraftRepo, branch: String, key: String,
-      newSpec: Seq[PartitionField],
-      precheck: Commit => Unit = _ => (),
-      setProps: Map[String, String] = Map.empty,
-      removeProps: Set[String] = Set.empty): Seq[PartitionField] = {
+      newSpec: Seq[PartitionField]): Seq[PartitionField] = {
     var committed: Seq[PartitionField] = Nil
     repo.commitRetry(branch, s"set partition spec on $key") { base =>
-      precheck(base)
       val sid = base.tables.getOrElse(key,
         throw new IllegalArgumentException(s"no such table: $key"))
-      val snap = repo.snapshot(sid)
-      val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-      validateSpec(schema, newSpec)
-      val current = snap.partitionFields.map(f => f.name -> f).toMap
-      val recorded: Set[String] =
-        snap.files.iterator.flatMap(_.partValues.keys).toSet ++ current.keySet
-      val taken = scala.collection.mutable.Set[String]() ++ recorded
-      val rebound = newSpec.map { pf =>
-        if (current.get(pf.name).contains(pf)) pf // unchanged field: keep name
-        else if (!taken.contains(pf.name)) { taken += pf.name; pf }
-        else {
-          val fresh = Iterator.from(2).map(i => s"${pf.name}_v$i")
-            .find(n => !taken.contains(n)).get
-          taken += fresh
-          pf.copy(name = fresh)
-        }
-      }
-      // property updates posted in the same commit ride along — an
-      // engine that bundles set/remove-properties with its spec change
-      // must see them land, not vanish
-      val props = (Option(snap.props).flatten.getOrElse(Map.empty)
-        -- removeProps) ++ setProps
-      val ns = repo.writeSnapshot(key, snap.schemaJson, snap.files,
-        if (rebound.isEmpty) None else Some(rebound),
-        Option(snap.physicalNames).flatten,
-        if (props.isEmpty) None else Some(props),
-        Option(snap.retired).flatten)
-      committed = rebound
+      val ns = respec(repo, key, repo.snapshot(sid), newSpec, Map.empty,
+        Set.empty)
+      committed = ns.partitionFields
       (base.tables + (key -> ns.id), base.namespaces)
     }
     committed
+  }
+
+  /** Write the snapshot [[setPartitionSpec]] commits: `snap` under
+    * `newSpec`, with property updates riding along — an engine that
+    * bundles set/remove-properties with its spec change must see them
+    * land, not vanish.
+    */
+  private[versioned] def respec(repo: GraftRepo, key: String, snap: Snapshot,
+      newSpec: Seq[PartitionField], setProps: Map[String, String],
+      removeProps: Set[String]): Snapshot = {
+    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
+    validateSpec(schema, newSpec)
+    val current = snap.partitionFields.map(f => f.name -> f).toMap
+    val recorded: Set[String] =
+      snap.files.iterator.flatMap(_.partValues.keys).toSet ++ current.keySet
+    val taken = scala.collection.mutable.Set[String]() ++ recorded
+    val rebound = newSpec.map { pf =>
+      if (current.get(pf.name).contains(pf)) pf // unchanged field: keep name
+      else if (!taken.contains(pf.name)) { taken += pf.name; pf }
+      else {
+        val fresh = Iterator.from(2).map(i => s"${pf.name}_v$i")
+          .find(n => !taken.contains(n)).get
+        taken += fresh
+        pf.copy(name = fresh)
+      }
+    }
+    val props = (snap.properties -- removeProps) ++ setProps
+    repo.writeSnapshot(key, snap.schemaJson, snap.files,
+      if (rebound.isEmpty) None else Some(rebound),
+      Option(snap.physicalNames).flatten,
+      if (props.isEmpty) None else Some(props),
+      Option(snap.retired).flatten)
   }
 
   private def zorderColumn(snap: Snapshot, schema: StructType,

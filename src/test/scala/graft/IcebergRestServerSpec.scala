@@ -4828,4 +4828,538 @@ class IcebergRestServerSpec extends AnyFunSuite with Matchers
       req(sh, "GET", "/v1/namespaces", Some(tok))._1 shouldBe 401
     } finally sh.close()
   }
+
+  /** Shared fixtures for the commit-pipeline specs below: a writable
+    * server over repo `name` (created with `setup` SQL), and the posted
+    * shapes an engine builds against a served table. */
+  private final class Pipeline(name: String, maxSnapshots: Int = 1) {
+    import spark.implicits._
+    val root: java.nio.file.Path = java.nio.file.Paths.get(
+      spark.conf.get("spark.sql.catalog.g.root"), name)
+    val srv: IcebergRestServer = IcebergRestServer.start(GraftRepo.open(root),
+      Files.createTempDirectory(s"graft-$name-exports"), Some(spark),
+      maxSnapshots = maxSnapshots, writable = true)
+    val scratch: java.nio.file.Path = Files.createTempDirectory(s"rest-$name")
+    val ns: String = enc("main", "db")
+    private var lastId = 6000L
+    def nextId(): Long = { lastId += 1; lastId }
+    def load(t: String): JsonNode =
+      get(s"/v1/namespaces/$ns/tables/$t", srv)._2
+    def stageOf(meta: JsonNode): java.nio.file.Path =
+      java.nio.file.Paths.get(URI.create(
+        meta.get("properties").get("write.data.path").asText() + "/"))
+    def baseOf(ld: JsonNode): Seq[java.nio.file.Path] =
+      graft.versioned.IcebergImport.plan(
+        java.nio.file.Paths.get(ld.get("metadata-location").asText()))
+        .dataPaths.map(java.nio.file.Paths.get(_))
+    /** A fresh file of `rows` under the table's staging dir. */
+    def file(meta: JsonNode, rows: Seq[(Int, String)]): java.nio.file.Path = {
+      val f = stageOf(meta).resolve(s"f-${nextId()}.parquet")
+      writeOneParquet(rows.toDF("id", "v"), f)
+      f
+    }
+    /** The base file holding `id`, and that row's position in it. */
+    def holding(ld: JsonNode, id: Int): (java.nio.file.Path, Long) =
+      baseOf(ld).iterator.map { p =>
+        p -> spark.read.parquet(p.toString).collect()
+          .indexWhere(_.getInt(0) == id)
+      }.collectFirst { case (p, i) if i >= 0 => (p, i.toLong) }.get
+    def fieldId(meta: JsonNode, col: String): Int = {
+      import scala.jdk.CollectionConverters._
+      meta.get("schemas").elements().next().get("fields").elements().asScala
+        .find(_.get("name").asText() == col).get.get("id").asInt()
+    }
+    def reqs(meta: JsonNode): String = {
+      val ref = Option(meta.get("refs")).flatMap(r => Option(r.get("main")))
+        .map(r => s""","snapshot-id":${r.get("snapshot-id").asLong()}""")
+        .getOrElse("")
+      s"""[{"type":"assert-table-uuid",
+         |"uuid":"${meta.get("table-uuid").asText()}"},
+         |{"type":"assert-ref-snapshot-id","ref":"main"$ref}]"""
+        .stripMargin.replaceAll("\n", "")
+    }
+    def addSnap(id: Long, list: java.nio.file.Path, op: String,
+        schemaId: Int = 0): String =
+      s"""{"action":"add-snapshot","snapshot":{"snapshot-id":$id,
+         |"timestamp-ms":1700000000000,"schema-id":$schemaId,
+         |"manifest-list":"${list.toUri}","summary":{"operation":"$op"}}},
+         |{"action":"set-snapshot-ref","ref-name":"main",
+         |"snapshot-id":$id,"type":"branch"}"""
+        .stripMargin.replaceAll("\n", "")
+    /** add-schema (the served schema + one optional column) as id 1. */
+    def addColumn(meta: JsonNode, col: String, typ: String): String = {
+      import scala.jdk.CollectionConverters._
+      val fields = meta.get("schemas").elements().next().get("fields")
+        .elements().asScala.toSeq
+      val next = fields.map(_.get("id").asInt()).max + 1
+      s"""{"action":"add-schema","schema":{"type":"struct","schema-id":1,
+         |"fields":[${fields.mkString(",")},{"id":$next,"name":"$col",
+         |"required":false,"type":"$typ"}]}},
+         |{"action":"set-current-schema","schema-id":-1}"""
+        .stripMargin.replaceAll("\n", "")
+    }
+    def body(meta: JsonNode, updates: String*): String =
+      s"""{"requirements":${reqs(meta)},"updates":[${updates.mkString(",")}]}"""
+    /** An append of `rows` against `t`'s served base. */
+    def append(t: String, rows: Seq[(Int, String)]): String = {
+      val ld = load(t); val meta = ld.get("metadata"); val id = nextId()
+      body(meta, addSnap(id,
+        stageWriterCommit(scratch, id, baseOf(ld) :+ file(meta, rows)),
+        "append"))
+    }
+    /** POST one CommitTableRequest-shaped body to table `t`: on the
+      * single-table route, or as the only member of a transaction. */
+    def post(t: String, txn: Boolean, b: String): (Int, JsonNode) =
+      if (txn) send("POST", "/v1/transactions/commit",
+        s"""{"table-changes":[{"identifier":{"namespace":["main","db"],""" +
+          s""""name":"$t"},${b.stripPrefix("{")}]}""", srv)
+      else send("POST", s"/v1/namespaces/$ns/tables/$t", b, srv)
+    def txn(members: (String, String)*): (Int, JsonNode) =
+      send("POST", "/v1/transactions/commit", members.map { case (t, b) =>
+        s"""{"identifier":{"namespace":["main","db"],"name":"$t"},""" +
+          b.stripPrefix("{")
+      }.mkString("""{"table-changes":[""", ",", "]}"), srv)
+    /** Stage-create `t`; returns the staged metadata. */
+    def stageCreate(t: String): JsonNode = {
+      val (c, r) = send("POST", s"/v1/namespaces/$ns/tables",
+        s"""{"name":"$t","stage-create":true,"schema":{"type":"struct",
+           |"schema-id":0,"fields":[
+           |{"id":1,"name":"id","required":false,"type":"int"},
+           |{"id":2,"name":"v","required":false,"type":"string"}]},
+           |"properties":{"owner":"ctas"}}"""
+          .stripMargin.replaceAll("\n", ""), srv)
+      c shouldBe 200
+      r.get("metadata")
+    }
+    /** The assert-create commit publishing staged `sm` with `list`. */
+    def createBody(sm: JsonNode, id: Long, list: String): String =
+      s"""{"requirements":[{"type":"assert-create"}],"updates":[
+         |{"action":"assign-uuid","uuid":"${sm.get("table-uuid").asText()}"},
+         |{"action":"add-schema","schema":${mapper.writeValueAsString(
+             sm.get("schemas").elements().next())}},
+         |{"action":"set-current-schema","schema-id":-1},
+         |{"action":"add-partition-spec","spec":{"spec-id":0,"fields":[]}},
+         |{"action":"set-default-spec","spec-id":-1},
+         |{"action":"set-properties","updates":{"stage":"1"}},
+         |{"action":"add-snapshot","snapshot":{"snapshot-id":$id,
+         |"timestamp-ms":1700000000000,"schema-id":0,
+         |"manifest-list":"$list","summary":{"operation":"append"}}},
+         |{"action":"set-snapshot-ref","ref-name":"main",
+         |"snapshot-id":$id,"type":"branch"}]}"""
+        .stripMargin.replaceAll("\n", "")
+    /** Rows, live files as (rows, sequence), properties and schema of
+      * `t` at the branch head — what parity compares. The schema id a
+      * transaction records for an engine is left out: only the route
+      * that answers without metadata records it. */
+    def state(t: String): (Seq[String], Seq[(Long, Long)],
+        Map[String, String], String) = {
+      val g = GraftRepo.open(root)
+      val sn = g.snapshot(g.resolve("main").tables(s"db/$t"))
+      (sql(s"SELECT * FROM g.$name.main.db.$t").collect().map(_.toString)
+        .toSeq.sorted, sn.files.map(f => (f.rows, f.seqNo)).sorted,
+        sn.properties - "graft.rest.schema-id", sn.schemaJson)
+    }
+    def errType(r: JsonNode): String = r.get("error").get("type").asText()
+    def close(): Unit = srv.close()
+  }
+
+  test("one commit pipeline (PARITY): every member shape lands the same " +
+    "rows, live files, sequence numbers and properties as a single-table " +
+    "commit and as a one-member transaction on twin tables; every " +
+    "refused shape answers the same status and error type both ways") {
+    import spark.implicits._
+    sql("CREATE NAMESPACE g.parity")
+    sql("CREATE NAMESPACE g.parity.main.db")
+    Seq("a", "b").foreach { t =>
+      sql(s"CREATE TABLE g.parity.main.db.$t (id INT, v STRING)")
+      sql(s"INSERT INTO g.parity.main.db.$t VALUES (1,'a'), (2,'b'), (3,'c')")
+    }
+    val p = new Pipeline("parity")
+    import p._
+    try {
+      val shapes: Seq[(String, String => String)] = Seq(
+        "append" -> (t => append(t, Seq((4, "d")))),
+        "equality delete (+ same-commit add)" -> { t =>
+          val ld = load(t); val meta = ld.get("metadata"); val id = nextId()
+          val eq = stageOf(meta).resolve(s"eq-${nextId()}.parquet")
+          writeOneParquet(Seq(2).toDF("id"), eq)
+          body(meta, addSnap(id, stageMixedDeleteCommit(scratch, id,
+            baseOf(ld) :+ file(meta, Seq((2, "B"))),
+            Seq((eq, 2, Some(Seq(fieldId(meta, "id")))))), "overwrite"))
+        },
+        "positional delete" -> { t =>
+          val ld = load(t); val meta = ld.get("metadata"); val id = nextId()
+          val (dirty, pos) = holding(ld, 1)
+          val pd = stageOf(meta).resolve(s"pos-${nextId()}.parquet")
+          writeOneParquet(Seq((dirty.toUri.toString, pos))
+            .toDF("file_path", "pos"), pd)
+          body(meta, addSnap(id, stageMixedDeleteCommit(scratch, id,
+            baseOf(ld), Seq((pd, 1, None))), "delete"))
+        },
+        "overwrite (CoW drop)" -> { t =>
+          val ld = load(t); val meta = ld.get("metadata"); val id = nextId()
+          val (dropped, _) = holding(ld, 4)
+          body(meta, addSnap(id, stageWriterCommit(scratch, id,
+            baseOf(ld).filterNot(_ == dropped) :+ file(meta, Seq((40, "dd")))),
+            "overwrite"))
+        },
+        "evolve+append" -> { t =>
+          val ld = load(t); val meta = ld.get("metadata"); val id = nextId()
+          val f = stageOf(meta).resolve(s"wide-${nextId()}.parquet")
+          writeOneParquet(Seq((5, "e", 50L)).toDF("id", "v", "flag"), f)
+          body(meta, addColumn(meta, "flag", "long"), addSnap(id,
+            stageWriterCommit(scratch, id, baseOf(ld) :+ f), "append",
+            schemaId = 1))
+        },
+        "schema-only" -> (t => body(load(t).get("metadata"),
+          addColumn(load(t).get("metadata"), "note", "string"))),
+        "properties-only" -> (t => body(load(t).get("metadata"),
+          """{"action":"set-properties","updates":{"owner":"etl"}}""")))
+      shapes.foreach { case (shape, build) =>
+        val (ca, ea) = post("a", txn = false, build("a"))
+        val (cb, eb) = post("b", txn = true, build("b"))
+        withClue(s"$shape: $ea / $eb: ") {
+          ca shouldBe 200
+          cb shouldBe 204
+          state("a") shouldBe state("b")
+        }
+      }
+      state("a")._1 shouldBe Seq("[2,B,null,null]", "[3,c,null,null]",
+        "[40,dd,null,null]", "[5,e,50,null]")
+      state("a")._3.get("owner") shouldBe Some("etl")
+
+      // an assert-create CTAS, staged on twin names
+      Seq("ca" -> false, "cb" -> true).foreach { case (t, viaTxn) =>
+        val sm = stageCreate(t); val id = nextId()
+        val list = stageWriterCommit(scratch, id,
+          Seq(file(sm, Seq((7, "x"), (8, "y")))))
+        val (c, e) = post(t, viaTxn, createBody(sm, id, list.toUri.toString))
+        withClue(e.toString) { c shouldBe (if (viaTxn) 204 else 200) }
+      }
+      state("ca") shouldBe state("cb")
+      state("ca")._3.get("stage") shouldBe Some("1")
+
+      // refused shapes: the same status and error type both ways, and
+      // neither twin moves
+      val refused: Seq[(String, String => String)] = Seq(
+        "an append that drops base files" -> { t =>
+          val meta = load(t).get("metadata"); val id = nextId()
+          body(meta, addSnap(id, stageWriterCommit(scratch, id,
+            Seq(file(meta, Seq((9, "z"))))), "append"))
+        },
+        "an unknown operation" -> (t => append(t, Seq((9, "z")))
+          .replace("\"operation\":\"append\"", "\"operation\":\"expire\"")),
+        "a stale requirement" -> (t => append(t, Seq((9, "z")))
+          .replaceAll("(\"ref\":\"main\",\"snapshot-id\":)-?\\d+", "$1424242")),
+        "a graft.* property" -> (t => body(load(t).get("metadata"),
+          """{"action":"set-properties","updates":{"graft.mor.seq":"9"}}""")),
+        "an equality delete posted as an append" -> { t =>
+          val ld = load(t); val meta = ld.get("metadata"); val id = nextId()
+          val eq = stageOf(meta).resolve(s"eq-${nextId()}.parquet")
+          writeOneParquet(Seq(3).toDF("id"), eq)
+          body(meta, addSnap(id, stageMixedDeleteCommit(scratch, id,
+            baseOf(ld), Seq((eq, 2, Some(Seq(fieldId(meta, "id")))))),
+            "append"))
+        },
+        "an unreadable manifest list" -> (t => body(load(t).get("metadata"),
+          addSnap(nextId(), scratch.resolve("no-such-list.avro"), "append"))),
+        "an unknown snapshot schema-id" -> (t => append(t, Seq((9, "z")))
+          .replace("\"schema-id\":0", "\"schema-id\":77")),
+        "a rollback with property updates" -> (t =>
+          body(load(t).get("metadata"),
+            """{"action":"set-snapshot-ref","ref-name":"main",""" +
+              """"snapshot-id":424242,"type":"branch"}""",
+            """{"action":"set-properties","updates":{"o":"x"}}""")),
+        "a rollback with a schema change" -> { t =>
+          val meta = load(t).get("metadata")
+          body(meta, addColumn(meta, "late", "int"),
+            """{"action":"set-snapshot-ref","ref-name":"main",""" +
+              """"snapshot-id":424242,"type":"branch"}""")
+        },
+        "a member with no updates" -> (t =>
+          s"""{"requirements":${reqs(load(t).get("metadata"))},"updates":[]}"""),
+        "set-default-spec without a spec" -> (t =>
+          body(load(t).get("metadata"),
+            """{"action":"set-default-spec","spec-id":0}""")))
+      refused.foreach { case (shape, build) =>
+        val before = (state("a"), state("b"))
+        val (ca, ea) = post("a", txn = false, build("a"))
+        val (cb, eb) = post("b", txn = true, build("b"))
+        withClue(s"$shape: $ea / $eb: ") {
+          ca should (be >= 400 and be < 500)
+          cb shouldBe ca
+          errType(eb) shouldBe errType(ea)
+          (state("a"), state("b")) shouldBe before
+        }
+      }
+    } finally close()
+  }
+
+  test("transaction members speak the single-table vocabulary: the " +
+    "requirements iceberg-core's UpdateRequirements posts and the " +
+    "advisory no-op updates are accepted; a stale field requirement " +
+    "409s; a foreign format version and a schema change riding a " +
+    "rewrite refuse 400") {
+    sql("CREATE NAMESPACE g.txnvoc")
+    sql("CREATE NAMESPACE g.txnvoc.main.db")
+    sql("CREATE TABLE g.txnvoc.main.db.t (id INT, v STRING)")
+    sql("INSERT INTO g.txnvoc.main.db.t VALUES (1,'a')")
+    val p = new Pipeline("txnvoc")
+    import p._
+    def ids(): Seq[Int] = sql("SELECT id FROM g.txnvoc.main.db.t ORDER BY id")
+      .collect().map(_.getInt(0)).toSeq
+    try {
+      // iceberg-core's full requirement set, plus the named-ref form
+      // createTag posts ("the ref must not exist yet"), riding an append
+      // with every advisory update
+      def fieldReqs(meta: JsonNode, specId: Int): String =
+        s"""{"type":"assert-current-schema-id","current-schema-id":${
+             meta.get("current-schema-id").asInt()}},
+           |{"type":"assert-last-assigned-field-id","last-assigned-field-id":${
+             meta.get("last-column-id").asInt()}},
+           |{"type":"assert-default-spec-id","default-spec-id":$specId},
+           |{"type":"assert-last-assigned-partition-id",
+           |"last-assigned-partition-id":${meta.get("last-partition-id").asInt()}},
+           |{"type":"assert-default-sort-order-id","default-sort-order-id":${
+             meta.get("default-sort-order-id").asInt()}},
+           |{"type":"assert-ref-snapshot-id","ref":"nosuchtag"}"""
+          .stripMargin.replaceAll("\n", "")
+      def member(specId: Int, extra: String*): String = {
+        val b = append("t", Seq((ids().max + 1, "n")))
+        val meta = load("t").get("metadata")
+        b.replace("\"requirements\":[",
+          s"""\"requirements\":[${fieldReqs(meta, specId)},""")
+          .replace("]}", (("" +: extra).mkString(",")) + "]}")
+      }
+      val meta0 = load("t").get("metadata")
+      val advisory = Seq(
+        """{"action":"add-sort-order","sort-order":{"order-id":1,"fields":[]}}""",
+        """{"action":"set-default-sort-order","sort-order-id":-1}""",
+        """{"action":"set-statistics","snapshot-id":1,"statistics":{}}""",
+        """{"action":"remove-snapshots","snapshot-ids":[1]}""",
+        s"""{"action":"upgrade-format-version","format-version":${
+          meta0.get("format-version").asInt()}}""",
+        s"""{"action":"assign-uuid","uuid":"${meta0.get("table-uuid").asText()}"}""")
+      val (c, e) = send("POST", "/v1/transactions/commit",
+        s"""{"table-changes":[{"identifier":{"namespace":["main","db"],""" +
+          s""""name":"t"},${member(meta0.get("default-spec-id").asInt(),
+            advisory: _*).stripPrefix("{")}]}""", srv)
+      withClue(e.toString) { c shouldBe 204 }
+      ids() shouldBe Seq(1, 2)
+
+      // a field requirement that no longer holds: 409, nothing lands
+      val (cS, eS) = txn("t" -> member(7))
+      cS shouldBe 409
+      errType(eS) shouldBe "CommitFailedException"
+      ids() shouldBe Seq(1, 2)
+
+      // upgrading to a version this server does not serve refuses 400
+      val (cF, _) = txn("t" -> member(meta0.get("default-spec-id").asInt(),
+        """{"action":"upgrade-format-version","format-version":9}"""))
+      cF shouldBe 400
+      ids() shouldBe Seq(1, 2)
+
+      // a schema change riding an overwrite refuses 400, as it does on
+      // the single-table route
+      val ld = load("t"); val meta = ld.get("metadata"); val id = nextId()
+      val (cO, eO) = txn("t" -> body(meta, addColumn(meta, "flag", "long"),
+        addSnap(id, stageWriterCommit(scratch, id,
+          baseOf(ld) :+ file(meta, Seq((9, "z")))), "overwrite")))
+      cO shouldBe 400
+      eO.get("error").get("message").asText() should include ("append")
+      ids() shouldBe Seq(1, 2)
+    } finally close()
+  }
+
+  test("a transaction member posting an unknown snapshot schema-id " +
+    "refuses 400 — the single-table rule — and nothing lands") {
+    sql("CREATE NAMESPACE g.txnsid")
+    sql("CREATE NAMESPACE g.txnsid.main.db")
+    sql("CREATE TABLE g.txnsid.main.db.t (id INT, v STRING)")
+    sql("INSERT INTO g.txnsid.main.db.t VALUES (1,'a')")
+    val p = new Pipeline("txnsid")
+    import p._
+    try {
+      val (c, e) = txn("t" -> append("t", Seq((2, "b")))
+        .replace("\"schema-id\":0", "\"schema-id\":77"))
+      withClue(e.toString) { c shouldBe 400 }
+      e.get("error").get("message").asText() should include ("schema-id 77")
+      sql("SELECT id FROM g.txnsid.main.db.t").collect()
+        .map(_.getInt(0)).toSeq shouldBe Seq(1)
+    } finally close()
+  }
+
+  test("a schema id an engine gave a schema inside a transaction stays " +
+    "accepted only while that schema is current; the single-table route, " +
+    "which answers the served metadata, records none") {
+    sql("CREATE NAMESPACE g.sidrec")
+    sql("CREATE NAMESPACE g.sidrec.main.db")
+    Seq("t", "u").foreach { t =>
+      sql(s"CREATE TABLE g.sidrec.main.db.$t (id INT, v STRING)")
+      sql(s"INSERT INTO g.sidrec.main.db.$t VALUES (1,'a')")
+    }
+    val p = new Pipeline("sidrec")
+    import p._
+    def ids(t: String): Seq[Int] =
+      sql(s"SELECT id FROM g.sidrec.main.db.$t ORDER BY id")
+        .collect().map(_.getInt(0)).toSeq
+    def appendAs(t: String, id: Int, sid: Int): String =
+      append(t, Seq((id, "x"))).replace("\"schema-id\":0", s"\"schema-id\":$sid")
+    try {
+      // evolved inside a transaction as schema 1: an append under id 1
+      // lands while that schema is current
+      val meta = load("t").get("metadata")
+      txn("t" -> body(meta, addColumn(meta, "flag", "long")))._1 shouldBe 204
+      val (c1, e1) = txn("t" -> appendAs("t", 2, 1))
+      withClue(e1.toString) { c1 shouldBe 204 }
+      ids("t") shouldBe Seq(1, 2)
+      // a native ALTER changes the schema: id 1 no longer names it
+      sql("ALTER TABLE g.sidrec.main.db.t ADD COLUMN note STRING")
+      Seq(true, false).foreach { viaTxn =>
+        val (c, e) = post("t", viaTxn, appendAs("t", 3, 1))
+        withClue(s"txn=$viaTxn: $e: ") { c shouldBe 400 }
+        e.get("error").get("message").asText() should include ("schema-id 1")
+      }
+      ids("t") shouldBe Seq(1, 2)
+      txn("t" -> appendAs("t", 3, 0))._1 shouldBe 204
+      ids("t") shouldBe Seq(1, 2, 3)
+
+      // evolved on the single-table route: the engine got id 0 back
+      val metaU = load("u").get("metadata")
+      post("u", txn = false,
+        body(metaU, addColumn(metaU, "flag", "long")))._1 shouldBe 200
+      txn("u" -> appendAs("u", 2, 1))._1 shouldBe 400
+      txn("u" -> appendAs("u", 2, 0))._1 shouldBe 204
+      ids("u") shouldBe Seq(1, 2)
+    } finally close()
+  }
+
+  test("staged CREATE whose manifest list is missing or not avro answers " +
+    "400 — on the single-table route and as a transaction member — and " +
+    "creates nothing") {
+    sql("CREATE NAMESPACE g.ctasbad")
+    sql("CREATE NAMESPACE g.ctasbad.main.db")
+    val p = new Pipeline("ctasbad")
+    import p._
+    try {
+      val garbage = scratch.resolve("garbage.avro")
+      Files.writeString(garbage, "not an avro file")
+      for (list <- Seq(scratch.resolve("missing.avro"), garbage);
+           viaTxn <- Seq(false, true)) {
+        val sm = stageCreate("s")
+        val (c, e) = post("s", viaTxn,
+          createBody(sm, nextId(), list.toUri.toString))
+        withClue(s"$list txn=$viaTxn: $e: ") {
+          c shouldBe 400
+          errType(e) shouldBe "ValidationException"
+          e.get("error").get("message").asText() should include ("manifest-list")
+        }
+        get(s"/v1/namespaces/$ns/tables/s", srv)._1 shouldBe 404
+      }
+    } finally close()
+  }
+
+  test("member kinds that cannot share a commit — rollback, replace, tag " +
+    "write, partition-spec change — land as one-member transactions and " +
+    "refuse 400 beside a sibling; a member with no updates refuses 400 " +
+    "on both routes; an advisory-only member makes no commit") {
+    import spark.implicits._
+    sql("CREATE NAMESPACE g.txnkind")
+    sql("CREATE NAMESPACE g.txnkind.main.db")
+    sql("CREATE TABLE g.txnkind.main.db.k (id INT, v STRING)")
+    sql("CREATE TABLE g.txnkind.main.db.sib (id INT, v STRING)")
+    sql("INSERT INTO g.txnkind.main.db.k VALUES (1,'a'), (2,'b')")
+    sql("INSERT INTO g.txnkind.main.db.k VALUES (3,'c')")
+    sql("INSERT INTO g.txnkind.main.db.sib VALUES (10,'x')")
+    val p = new Pipeline("txnkind", maxSnapshots = 5)
+    import p._
+    def ids(t: String): Seq[Int] =
+      sql(s"SELECT id FROM g.txnkind.main.db.$t ORDER BY id")
+        .collect().map(_.getInt(0)).toSeq
+    try {
+      val g = GraftRepo.open(root)
+      val meta0 = load("k").get("metadata")
+      val sid0 = meta0.get("current-snapshot-id").asLong()
+      sql("INSERT INTO g.txnkind.main.db.k VALUES (4,'d')")
+      def solo(b: String): Unit = {
+        val (c, e) = txn("k" -> b)
+        withClue(e.toString) { c shouldBe 204 }
+      }
+      def beside(b: String): Unit = {
+        val (c, e) = txn("k" -> b, "sib" -> append("sib", Seq((99, "z"))))
+        withClue(e.toString) { c shouldBe 400 }
+        e.get("error").get("message").asText() should include ("only member")
+        ids("sib") shouldBe Seq(10)
+      }
+      // rollback to the pre-insert snapshot
+      def rollback(target: Long): String = body(load("k").get("metadata"),
+        s"""{"action":"set-snapshot-ref","ref-name":"main",
+           |"snapshot-id":$target,"type":"branch"}"""
+          .stripMargin.replaceAll("\n", ""))
+      beside(rollback(sid0))
+      ids("k") shouldBe Seq(1, 2, 3, 4)
+      solo(rollback(sid0))
+      ids("k") shouldBe Seq(1, 2, 3)
+
+      // replace: the engine compacts both files into one
+      def replace(): String = {
+        val ld = load("k"); val meta = ld.get("metadata"); val id = nextId()
+        val out = stageOf(meta).resolve(s"compacted-${nextId()}.parquet")
+        writeOneParquet(spark.read.parquet(baseOf(ld).map(_.toString): _*)
+          .orderBy("id").coalesce(1), out)
+        body(meta, addSnap(id, stageWriterCommit(scratch, id, Seq(out)),
+          "replace"))
+      }
+      beside(replace())
+      solo(replace())
+      ids("k") shouldBe Seq(1, 2, 3)
+      g.headCommit("main").markerOpt shouldBe
+        Some(graft.versioned.Commit.CompactMarker)
+      g.snapshot(g.resolve("main").tables("db/k")).files.size shouldBe 1
+
+      // tag write at the current snapshot
+      def tag(name: String): String = {
+        val sid = load("k").get("metadata").get("current-snapshot-id").asLong()
+        s"""{"requirements":[],"updates":[{"action":"set-snapshot-ref",
+           |"ref-name":"$name","snapshot-id":$sid,"type":"tag"}]}"""
+          .stripMargin.replaceAll("\n", "")
+      }
+      beside(tag("t1"))
+      g.tagExists("t1") shouldBe false
+      solo(tag("t1"))
+      g.tagExists("t1") shouldBe true
+
+      // partition-spec change
+      def respec(): String = {
+        val meta = load("k").get("metadata")
+        body(meta, s"""{"action":"add-partition-spec","spec":{"spec-id":1,
+           |"fields":[{"name":"v","transform":"identity","source-id":${
+             fieldId(meta, "v")},"field-id":1000}]}},
+           |{"action":"set-default-spec","spec-id":-1}"""
+          .stripMargin.replaceAll("\n", ""))
+      }
+      beside(respec())
+      g.snapshot(g.resolve("main").tables("db/k")).partitionFields shouldBe empty
+      solo(respec())
+      g.snapshot(g.resolve("main").tables("db/k")).partitionFields
+        .map(_.source) shouldBe Seq("v")
+
+      // a member with no updates is a client bug on both routes, beside
+      // a sibling too; an advisory-only member is a validated no-op that
+      // makes no commit
+      val headNoop = g.headCommit("main").id
+      val onlyReqs = s"""{"requirements":${reqs(load("k").get("metadata"))}}"""
+      val (cR, eR) = txn("k" -> onlyReqs, "sib" -> append("sib", Seq((11, "y"))))
+      cR shouldBe 400
+      eR.get("error").get("message").asText() should include ("no updates")
+      ids("sib") shouldBe Seq(10)
+      val (cN, eN) = post("k", txn = false,
+        s"""{"requirements":${reqs(load("k").get("metadata"))},"updates":[]}""")
+      cN shouldBe 400
+      eN.get("error").get("message").asText() should include ("no updates")
+      solo(body(load("k").get("metadata"),
+        """{"action":"remove-snapshots","snapshot-ids":[1]}"""))
+      g.headCommit("main").id shouldBe headNoop
+    } finally close()
+  }
 }
